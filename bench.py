@@ -44,6 +44,10 @@ def _pin_heap() -> None:
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from kafka_spark_streaming_eval_spark.plans.history import (  # noqa: E402
+    bench_timings,
+    round_reports,
+)
 from kafka_spark_streaming_eval_spark.plans.registry import all_queries  # noqa: E402
 from kafka_spark_streaming_eval_spark.session import get_spark  # noqa: E402
 from kafka_spark_streaming_eval_spark.streaming.generator import (  # noqa: E402
@@ -233,48 +237,28 @@ THROUGHPUT_EVENTS = 1_000_000
 TIER2_COUNT = 92
 
 
-def _last_benched_round() -> dict[str, int]:
-    """Per query, the latest committed bench round that timed it (headline or
-    tier2).  Reads three shapes: the driver's wrapper files (payload nested
-    under "parsed"; when "parsed" is null — the >2000-char-line rounds —
-    query names are recovered from the 2000-char "tail" by regex), a bare
-    bench JSON, and the BENCH_DETAILS.json sidecar (always at least as new
-    as the newest committed round)."""
-    import glob
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-
-    def absorb(payload: dict, rnd: int) -> None:
-        for key in ("queries", "tier2_queries"):
-            for name in payload.get(key) or {}:
-                last[name] = max(last.get(name, 0), rnd)
-
-    max_rnd = 0
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        max_rnd = max(max_rnd, rnd)
-        try:
-            with open(path) as f:
-                raw = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(raw.get("parsed"), dict):
-            absorb(raw["parsed"], rnd)
-        elif "queries" in raw or "tier2_queries" in raw:
-            absorb(raw, rnd)
-        elif isinstance(raw.get("tail"), str):
-            for nm in re.findall(r'"([a-z0-9_]+)":\s*-?[0-9.]+', raw["tail"]):
-                last[nm] = max(last.get(nm, 0), rnd)
+def _timing_history(here: str) -> list[tuple[int, str, object]]:
+    """``(round, query, seconds)`` from every committed ``BENCH_r<N>.json``
+    under ``here``, oldest first, then the ``BENCH_DETAILS.json`` sidecar
+    as one round newer (it is always at least as new as the newest
+    committed round)."""
+    reports = round_reports("BENCH", here)
+    rows = [(rnd, n, s) for rnd, raw in reports for n, s in bench_timings(raw)]
     try:
         with open(os.path.join(here, DETAILS_FILE)) as f:
-            absorb(json.load(f), max_rnd + 1)
+            sidecar = json.load(f)
     except (OSError, ValueError):
-        pass
+        return rows
+    nxt = max((rnd for rnd, _ in reports), default=0) + 1
+    return rows + [(nxt, n, s) for n, s in bench_timings(sidecar)]
+
+
+def _last_benched_round() -> dict[str, int]:
+    """Per query, the latest committed bench round that timed it (headline or
+    tier2)."""
+    last: dict[str, int] = {}
+    for rnd, name, _ in _timing_history(os.path.dirname(os.path.abspath(__file__))):
+        last[name] = max(last.get(name, 0), rnd)
     return last
 
 
@@ -283,58 +267,9 @@ def _last_measured_secs(here: str | None = None) -> dict[str, float]:
     the vs-own-last-measured base for the sidecar's ``vs_last`` field
     (VERDICT r9/r10 item 4: tier2_total swings 2x round-over-round from
     rotation mix alone, so only a per-query delta against that query's own
-    previous measurement separates a real regression from cohort churn).
-
-    Reads the same three payload shapes as ``_last_benched_round``; for
-    the tail-window rounds the (name, sec) pairs are recovered by the same
-    regex (non-query scalar fields like "value"/"sf" are absorbed but can
-    never collide with a registered query name)."""
-    import glob
-    import re
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    best: dict[str, tuple[int, float]] = {}  # name -> (round, sec)
-
-    def absorb(payload: dict, rnd: int) -> None:
-        for key in ("queries", "tier2_queries"):
-            for name, sec in (payload.get(key) or {}).items():
-                if isinstance(sec, (int, float)) and (
-                    name not in best or rnd >= best[name][0]
-                ):
-                    best[name] = (rnd, float(sec))
-
-    max_rnd = 0
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        max_rnd = max(max_rnd, rnd)
-        try:
-            with open(path) as f:
-                raw = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(raw.get("parsed"), dict):
-            absorb(raw["parsed"], rnd)
-        elif "queries" in raw or "tier2_queries" in raw:
-            absorb(raw, rnd)
-        elif isinstance(raw.get("tail"), str):
-            for nm, val in re.findall(
-                r'"([a-z0-9_]+)":\s*(-?[0-9]+\.?[0-9]*)', raw["tail"]
-            ):
-                try:
-                    sec = float(val)
-                except ValueError:
-                    continue
-                if nm not in best or rnd >= best[nm][0]:
-                    best[nm] = (rnd, sec)
-    try:
-        with open(os.path.join(here, DETAILS_FILE)) as f:
-            absorb(json.load(f), max_rnd + 1)
-    except (OSError, ValueError):
-        pass
-    return {name: sec for name, (_, sec) in best.items()}
+    previous measurement separates a real regression from cohort churn)."""
+    rows = _timing_history(here or os.path.dirname(os.path.abspath(__file__)))
+    return {n: float(s) for _, n, s in rows if isinstance(s, (int, float))}
 
 
 def vs_last_fields(now: dict[str, float], last: dict[str, float]) -> dict:

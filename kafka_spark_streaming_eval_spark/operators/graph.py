@@ -219,22 +219,12 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = nodes.select(F.col("src").alias("node"), (F.lit(1.0) / n).alias("rank"))
     ranks = ranks.coalesce(loop_parts)
     for it in range(PR_ITERS):
-        if loop_parts == 1:
-            # Single-partition loop state (small graphs): broadcast the rank
-            # vector and stream the 1-partition frac — the join needs no
-            # exchange, and the groupBy below none either (a SinglePartition
-            # child satisfies ClusteredDistribution), so each iteration is
-            # ZERO shuffles instead of one 1-partition exchange (r14 A/B at
-            # sf0.1: loop segments 2.4 s -> 2.0 s; trajectory bit-identical
-            # — same join, same quantized sum).
-            joined = frac.join(F.broadcast(ranks), ranks.node == frac.src)
-        else:
-            joined = ranks.join(frac, ranks.node == frac.src)
+        joined = ranks.join(frac, ranks.node == frac.src)
         contrib = joined.select(
             F.col("dst").alias("node"),
             F.floor(F.col("rank") * F.col("f") * F.lit(1.0e15)).alias("cb_i"),
         )
-        if 1 < loop_parts < sess_parts:
+        if loop_parts < sess_parts:
             # Tiny-state loop: pin the per-iteration exchange to loop_parts
             # with an EXPLICIT keyed repartition — the aggregate below reuses
             # that partitioning (ClusteredDistribution satisfied), so no

@@ -23,18 +23,18 @@ Determinism contract (so Spark and DuckDB hash-match bit-for-bit):
 from __future__ import annotations
 
 import ast
-import glob
 import hashlib
 import inspect
 import json
 import os
-import re
 import textwrap
 import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kafka_spark_streaming_eval_spark.plans import history
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -152,57 +152,54 @@ def _green_hash_ledger() -> dict[str, dict]:
     return ledger if isinstance(ledger, dict) else {}
 
 
+def _is_green_row(name: str, row: object) -> bool:
+    """One CORRECTNESS row verified its query: ``hash_match`` true, or a
+    clean rows-only ("no_oracle") check for a query that STILL has no oracle
+    — once an oracle is added, the stronger hash check must actually run
+    before the query sorts back among the verified."""
+    if not isinstance(row, dict):
+        return False
+    if row.get("hash_match") is True:
+        return True
+    spec = _REGISTRY.get(name)
+    return (
+        row.get("err") == "no_oracle"
+        and row.get("spark_rows") is not None
+        and spec is not None
+        and spec.oracle is None
+    )
+
+
+def _green_rounds(*roots: str) -> dict[str, int]:
+    """Per query, the newest round whose CORRECTNESS report under ``roots``
+    has a green row for it, ignoring the ledger."""
+    _load_all()  # oracle presence feeds the rows-only rule
+    green: dict[str, int] = {}
+    for rnd, report in history.round_reports("CORRECTNESS", *roots):
+        if isinstance(report, dict):
+            for name, row in report.items():
+                if _is_green_row(name, row):
+                    green[name] = max(green.get(name, 0), rnd)
+    return green
+
+
 def _last_green_round() -> dict[str, int]:
     """Per query, the latest round whose CORRECTNESS report verified it green.
 
     The per-round driver budget covers a prefix of the ``queries()`` dict, so
     ordering is coverage policy: queries that have never earned a green
-    CORRECTNESS row (hash_match=true, or a clean rows-only check for
-    oracle-less entries) must run before queries already verified, and among
-    the verified ones the stalest verification re-runs first.  This reads the
-    committed ``CORRECTNESS_r*.json`` reports so the rotation advances by
-    itself every round.
+    CORRECTNESS row must run before queries already verified, and among the
+    verified ones the stalest verification re-runs first.  This reads the
+    committed ``CORRECTNESS_r*.json`` reports (in the cwd and the repo root)
+    so the rotation advances by itself every round.
+
+    A green row only counts for the code it verified (VERDICT r6 item 2):
+    if the query's current content hash differs from the hash recorded in
+    the green-hash ledger at stamp time — or was never stamped at all —
+    the implementation changed (or was never hash-attested) since the
+    driver last saw it, and the query re-enters the rotation never-green.
     """
-    _load_all()  # oracle presence feeds the rows-only rule below
-    roots = {os.getcwd()}
-    # plans/registry.py -> plans -> package -> repo root (three dirnames, not
-    # four: four lands on the repo's PARENT and the glob silently finds no
-    # CORRECTNESS reports when cwd isn't the repo root).
-    here = os.path.abspath(__file__)
-    roots.add(os.path.dirname(os.path.dirname(os.path.dirname(here))))
-    last_green: dict[str, int] = {}
-    for root in roots:
-        for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-            m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-            if not m:
-                continue
-            rnd = int(m.group(1))
-            try:
-                with open(path) as f:
-                    report = json.load(f)
-            except (OSError, ValueError):
-                continue
-            if not isinstance(report, dict):
-                continue
-            for name, row in report.items():
-                if not isinstance(row, dict):
-                    continue
-                # A rows-only ("no_oracle") record only counts as verified if
-                # the query STILL has no oracle — once an oracle is added, the
-                # stronger hash check must actually run before it sorts back.
-                rows_only_ok = (
-                    row.get("err") == "no_oracle"
-                    and row.get("spark_rows") is not None
-                    and name in _REGISTRY
-                    and _REGISTRY[name].oracle is None
-                )
-                if row.get("hash_match") is True or rows_only_ok:
-                    last_green[name] = max(last_green.get(name, 0), rnd)
-    # A green row only counts for the code it verified (VERDICT r6 item 2):
-    # if the query's current content hash differs from the hash recorded in
-    # the green-hash ledger at stamp time — or was never stamped at all —
-    # the implementation changed (or was never hash-attested) since the
-    # driver last saw it, and the query re-enters the rotation never-green.
+    last_green = _green_rounds(*{os.getcwd(), history.REPO_ROOT})
     ledger = _green_hash_ledger()
     for name in list(last_green):
         spec = _REGISTRY.get(name)
@@ -225,36 +222,8 @@ def stamp_green_hashes() -> dict[str, dict]:
     re-stamps ONLY if a green round NEWER than the recorded stamp exists
     (i.e. the driver re-verified after the rewrite).
     """
-    _load_all()
-    # newest green round per name, straight from the reports (pre-ledger)
-    raw_green: dict[str, int] = {}
-    here = os.path.abspath(__file__)
-    root = os.path.dirname(os.path.dirname(os.path.dirname(here)))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                report = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(report, dict):
-            continue
-        for name, row in report.items():
-            if not isinstance(row, dict):
-                continue
-            rows_only_ok = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-                and name in _REGISTRY
-                and _REGISTRY[name].oracle is None
-            )
-            if row.get("hash_match") is True or rows_only_ok:
-                raw_green[name] = max(raw_green.get(name, 0), rnd)
     ledger = _green_hash_ledger()
-    for name, rnd in sorted(raw_green.items()):
+    for name, rnd in sorted(_green_rounds().items()):
         spec = _REGISTRY.get(name)
         if spec is None:
             continue
@@ -272,42 +241,16 @@ def stamp_green_hashes() -> dict[str, dict]:
     return ledger
 
 
-# Coverage-policy pins (VERDICT r7 item 5): name -> round by which the
-# driver must have re-verified the query.  A pin is ACTIVE while the query's
-# last green round is below that target; active pins sort immediately AFTER
-# never-green queries and before all stale-green rotation, then self-clear
-# once the demanded CORRECTNESS row lands (no per-round curation, no wasted
-# budget slots afterwards).  These four stream queries execute their
-# pipeline on plan-build, so PLAN_AUDIT excludes them (documented) — driver
-# re-verification is their only end-to-end re-check, and being
-# streaming-slow they must not slip out of the 50-query budget two rounds
-# running: demand a green check in round >= 8.
-ROTATION_PINS: dict[str, int] = {
-    "stream_stateful_running_count": 8,
-    "stream_python_datasource_source": 8,
-    "stream_stream_left_outer_join": 8,
-    "stream_foreachbatch_merge_upsert": 8,
-}
-
-
 def all_queries() -> dict[str, QuerySpec]:
     """Name -> spec for every registered query (imports operator modules).
 
     Ordered for driver verification rotation: never-green queries first (in
-    registration order), then active ROTATION_PINS, then green queries
-    stalest-verification-first.
+    registration order), then green queries stalest-verification-first.
     """
     _load_all()
     last_green = _last_green_round()
     reg_index = {name: i for i, name in enumerate(_REGISTRY)}
-
-    def key(n: str):
-        rnd = last_green.get(n, -1)
-        if 0 <= rnd < ROTATION_PINS.get(n, 0):
-            rnd = 0  # after never-green (-1), before every real round (>=1)
-        return (rnd, reg_index[n])
-
-    ordered = sorted(_REGISTRY, key=key)
+    ordered = sorted(_REGISTRY, key=lambda n: (last_green.get(n, -1), reg_index[n]))
     return {name: _REGISTRY[name] for name in ordered}
 
 
@@ -329,19 +272,10 @@ def _load_all() -> None:
     from kafka_spark_streaming_eval_spark.functions import udfs  # noqa: F401
     from kafka_spark_streaming_eval_spark.sources import readers  # noqa: F401
     from kafka_spark_streaming_eval_spark.streaming import queries, stateful  # noqa: F401
-
-    # Round-N additions import LAST (in round order): their registration
-    # index must sort AFTER every pre-existing never-green query so they
-    # never displace the driver-rotation backlog that is still draining
-    # (VERDICT r3 item 1).  Round 5: the 27-query backlog occupies rotation
-    # positions 0-26 and the driver budget is 50, so the 14 round-5 additions
-    # (5 in curation.py + 8 in curation2.py + src_xml_roundtrip_scan in
-    # sources/readers.py) drain in the SAME round without displacing anything
-    # — 41 never-green total, 9 budget slots spare (asserted in
-    # tests/test_plans.py::test_rotation_order_never_green_first).
+    # import order is registration order, the rotation's tie-break: these
+    # later additions register last
     from kafka_spark_streaming_eval_spark.operators import corpus  # noqa: F401
     from kafka_spark_streaming_eval_spark.operators import curation  # noqa: F401
-    from kafka_spark_streaming_eval_spark.operators import curation2  # noqa: F401
 
 
 if __name__ == "__main__":  # python -m kafka_spark_streaming_eval_spark.plans.registry stamp

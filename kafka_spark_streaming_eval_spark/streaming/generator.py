@@ -20,9 +20,10 @@ EVENT_TYPES = ("click", "view", "purchase", "login")  # producer.py:42
 BASE_TS_MS = 1_700_000_000_000  # fixed epoch anchor replacing wall-clock
 
 # Wire field order — shared by the JSON wire (reference parity,
-# producer.py:38-45) and the positional CSV wire (r14).  created_ts before
-# the free-form payload field is load-bearing for the probe-only regex
-# decode (sat_probe.py).
+# producer.py:38-45) and the positional CSV wire (r14).  The CSV wire is
+# decoded by position against ``metrics_job.EVENT_WIRE_SCHEMA``
+# (``parse_events(wire="csv")``), so the two orders must agree;
+# ``stream_csv_wire_roundtrip`` checks the round trip.
 WIRE_FIELD_ORDER = (
     "event_id", "created_ts", "user_id", "event_type", "value", "payload",
 )
@@ -44,7 +45,7 @@ def to_wire(
     four bare words, comma-free padding) never need quoting.
 
     ``created_ts`` optionally overrides the deterministic created_ts with a
-    real emission-time column (the streaming probes pass
+    real emission-time column (a live stream passes
     ``unix_millis("ts")``)."""
     if fmt not in ("json", "csv"):
         raise ValueError(f"unknown wire format {fmt!r}")

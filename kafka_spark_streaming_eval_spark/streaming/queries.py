@@ -82,7 +82,9 @@ def _stream_dir(sf_dir: str, name: str) -> str:
     Handles both table layouts (VERDICT r14 item 1): a single parquet file
     (driver testdata — one symlink) and a directory of part files (every
     Spark-written table — one symlink per part file, flattened, because the
-    file stream source does not recurse into subdirectories by default)."""
+    file stream source does not recurse into subdirectories by default).
+    A table directory with no top-level part file (nested or partitioned
+    layouts) raises ``ValueError`` instead of streaming an empty result."""
     import os
 
     from kafka_spark_streaming_eval_spark.session import scratch_dir
@@ -100,6 +102,11 @@ def _stream_dir(sf_dir: str, name: str) -> str:
             if os.path.isdir(src)
             else [(src, f"{name}.parquet")]
         )
+        if not targets:
+            raise ValueError(
+                f"{src}: no top-level *.parquet part files to stream "
+                "(nested or partitioned table directories are not supported)"
+            )
         for target, link_name in targets:
             try:
                 os.symlink(target, os.path.join(d, link_name))

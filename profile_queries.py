@@ -1,16 +1,16 @@
 #!/usr/bin/env python
-"""Round-14 optimization profiler (guide §1: measure first).
+"""Per-query profiler (guide §1: measure first).
 
 For each named registry query: capture ``explain("formatted")`` to
-``plans/r14/<name>_<tag>.txt``, then time the query isolated — both with
+``plans/profile/<name>_<tag>.txt``, then time the query isolated — both with
 the bench's own action (``.count()``, best of N) and with the noop sink
 (``df.write.format("noop")``, guide §1.4 — full materialization of every
 column, so plan-shape changes that ``count()`` would prune away are still
 visible).  Prints one JSON line per query and a total.
 
 Usage:
-    python profile_r14.py --tag before graph_pagerank_trade dedup_...
-    python profile_r14.py --tag before --all-headline
+    python profile_queries.py --tag before graph_pagerank_trade dedup_...
+    python profile_queries.py --tag before --all-headline
 Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.
 """
 
@@ -28,7 +28,7 @@ os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--driver-memory 16g pyspark-shell"
 from kafka_spark_streaming_eval_spark.plans.registry import all_queries  # noqa: E402
 from kafka_spark_streaming_eval_spark.session import get_spark  # noqa: E402
 
-PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "r14")
+PLANS_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plans", "profile")
 
 
 def main() -> None:
@@ -41,25 +41,23 @@ def main() -> None:
     ap.add_argument("--noop", action="store_true", help="also time via noop sink")
     args = ap.parse_args()
 
+    import bench
+
     specs = all_queries()
     names = list(args.names)
     if args.all_headline:
-        import bench
-
         names = [n for n in bench.HEADLINE if n not in names] + names
     os.makedirs(PLANS_DIR, exist_ok=True)
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    spark = get_spark("profile_r14")
+    spark = get_spark("profile_queries")
     # Warm-up (same as bench): JVM/JIT/page cache out of the measurement.
     specs["ref_minmax_anchor"].fn(spark, sf_dir).count()
-
-    import bench as _b
 
     results: dict[str, dict] = {}
     for name in names:
         fn = specs[name].fn
-        spark.sparkContext.setJobDescription(f"r14:{name}")
+        spark.sparkContext.setJobDescription(f"profile:{name}")
         if not args.no_explain:
             df = fn(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -67,7 +65,7 @@ def main() -> None:
             )
             with open(os.path.join(PLANS_DIR, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
-        meter = _b.StealMeter()
+        meter = bench.StealMeter()
         best_count = float("inf")
         for _ in range(args.runs):
             t0 = time.perf_counter()

@@ -304,22 +304,32 @@ def test_budget_stdout_payload_serializes_null_stream_fields():
 def test_last_measured_secs_latest_round_wins(tmp_path):
     """VERDICT r9/r10 item 4: the vs-last base must be each query's OWN
     latest measurement across all three payload vintages, with the sidecar
-    (always newest) taking precedence."""
+    (always newest) taking precedence.  The shared history reader sees each
+    vintage's shape: the driver's wrapper, a bare payload, and the tail-only
+    record whose pairs are recovered by regex."""
     import json
 
-    (tmp_path / "BENCH_r01.json").write_text(
-        json.dumps({"parsed": {"queries": {"qa": 1.0, "qb": 5.0}}})
-    )
-    (tmp_path / "BENCH_r02.json").write_text(
-        json.dumps({"queries": {"qa": 2.0}, "tier2_queries": {"qc": 7.0}})
-    )
-    # tail-window vintage: values recovered by regex
-    (tmp_path / "BENCH_r03.json").write_text(
-        json.dumps({"parsed": None, "tail": '..., "qb": 6.25, "value": 9.9}'})
-    )
+    from kafka_spark_streaming_eval_spark.plans.history import bench_timings
+
+    shapes = {
+        "BENCH_r01.json": {"parsed": {"queries": {"qa": 1.0, "qb": 5.0}}},
+        "BENCH_r02.json": {"queries": {"qa": 2.0}, "tier2_queries": {"qc": 7.0}},
+        # tail-window vintage: values recovered by regex
+        "BENCH_r03.json": {"parsed": None, "tail": '..., "qb": 6.25, "value": 9.9}'},
+        # a core-count variant is not a round report
+        "BENCH_r03_c8.json": {"queries": {"qa": 99.0}},
+    }
+    for name, payload in shapes.items():
+        (tmp_path / name).write_text(json.dumps(payload))
+    assert bench_timings(shapes["BENCH_r01.json"]) == [("qa", 1.0), ("qb", 5.0)]
+    assert bench_timings(shapes["BENCH_r02.json"]) == [("qa", 2.0), ("qc", 7.0)]
+    assert bench_timings(shapes["BENCH_r03.json"]) == [("qb", 6.25), ("value", 9.9)]
+    # an unreadable report still counts its round: the sidecar is round 5
+    (tmp_path / "BENCH_r04.json").write_text("{truncated")
     (tmp_path / "BENCH_DETAILS.json").write_text(
         json.dumps({"queries": {"qa": 3.5}})
     )
+    assert bench._timing_history(str(tmp_path))[-1] == (5, "qa", 3.5)
     last = bench._last_measured_secs(str(tmp_path))
     assert last["qa"] == 3.5  # sidecar beats r02
     assert last["qb"] == 6.25  # tail regex beats r01

@@ -460,61 +460,6 @@ def test_green_hash_ledger_attests_current_code():
     assert not orphans, f"ledger entries for unregistered queries: {sorted(orphans)}"
 
 
-def test_rotation_pins_sort_after_never_green_before_stale(monkeypatch):
-    """ROTATION_PINS (VERDICT r7 item 5): an ACTIVE pin (last green round
-    below the pin's demanded round) must enter the driver budget ahead of
-    all stale-green rotation but never displace a never-green query; a
-    SATISFIED pin self-clears back into normal stalest-first rotation."""
-    from kafka_spark_streaming_eval_spark.plans import registry
-
-    names = list(registry.all_queries())
-    green = registry._last_green_round()
-    assert set(registry.ROTATION_PINS) <= set(names), "pin for unregistered query"
-    active = [
-        n
-        for n, rnd in registry.ROTATION_PINS.items()
-        if n in green and green[n] < rnd
-    ]
-    if active:
-        first_unpinned_green = min(
-            names.index(n) for n in names if n in green and n not in active
-        )
-        assert all(names.index(n) < first_unpinned_green for n in active)
-        # and never before a never-green query
-        last_never = max(
-            (names.index(n) for n in names if n not in green), default=-1
-        )
-        assert all(names.index(n) > last_never for n in active)
-    # a satisfied pin (green at/after its demanded round) must NOT lead the
-    # rotation: simulate the pin's demand already met
-    victim = sorted(registry.ROTATION_PINS)[0]
-    if victim in green:
-        satisfied = dict(registry.ROTATION_PINS)
-        satisfied[victim] = green[victim]  # demand == already-green round
-        monkeypatch.setattr(registry, "ROTATION_PINS", satisfied)
-        names_sat = list(registry.all_queries())
-        green_sat = registry._last_green_round()
-        pos = {n: i for i, n in enumerate(names_sat)}
-        # back in stalest-first rotation: every strictly-staler green query
-        # (and every other still-active pin) sorts BEFORE it
-        staler = [
-            n for n in green_sat if green_sat[n] < green_sat[victim]
-        ]
-        assert all(pos[n] < pos[victim] for n in staler), (
-            "satisfied pin still leads the rotation"
-        )
-    # with a pin hash-reset to never-green, it still sorts by registration
-    if victim in green:
-        fake = dict(registry._green_hash_ledger())
-        fake[victim] = {"hash": "0" * 32, "round": green[victim]}
-        monkeypatch.setattr(registry, "_green_hash_ledger", lambda: fake)
-        names2 = list(registry.all_queries())
-        green2 = registry._last_green_round()
-        assert victim not in green2
-        first_green2 = next(i for i, n in enumerate(names2) if n in green2)
-        assert names2.index(victim) < first_green2
-
-
 def test_rotation_order_never_green_first():
     """The driver's per-round budget covers a PREFIX of queries(), so the
     ordering IS the coverage policy: every query without a green
@@ -535,18 +480,13 @@ def test_rotation_order_never_green_first():
     assert all(flags[first_green:]), "a never-green query sorts after a green one"
     never = [n for n in names if n not in green]
     if never:
-        from kafka_spark_streaming_eval_spark.operators import (
-            corpus,
-            curation,
-            curation2,
-        )
+        from kafka_spark_streaming_eval_spark.operators import corpus, curation
 
         late = {
             n
             for n in never
             if getattr(corpus, n, None) is not None
             or getattr(curation, n, None) is not None
-            or getattr(curation2, n, None) is not None
         }
         if late:
             cutoff = max(

@@ -922,7 +922,7 @@ def test_priority_sample_matches_python_spec(sp, tmp_path_factory, docs, weights
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_spark_streaming_eval_spark.operators.curation2 import SAMPLE_K
+    from kafka_spark_streaming_eval_spark.operators.curation import SAMPLE_K
     from kafka_spark_streaming_eval_spark.plans.registry import all_queries
 
     d = tmp_path_factory.mktemp("psamp")
@@ -975,7 +975,7 @@ def test_ewma_matches_python_fraction_spec(sp, tmp_path_factory, vals):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_spark_streaming_eval_spark.operators.curation2 import EWMA_WEIGHTS
+    from kafka_spark_streaming_eval_spark.operators.curation import EWMA_WEIGHTS
     from kafka_spark_streaming_eval_spark.plans.registry import all_queries
 
     d = tmp_path_factory.mktemp("ewma")
@@ -1034,7 +1034,7 @@ def test_mad_outliers_match_python_spec(sp, tmp_path_factory, vals):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_spark_streaming_eval_spark.operators.curation2 import MAD_K
+    from kafka_spark_streaming_eval_spark.operators.curation import MAD_K
     from kafka_spark_streaming_eval_spark.plans.registry import all_queries
 
     d = tmp_path_factory.mktemp("mad")

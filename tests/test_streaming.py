@@ -593,6 +593,24 @@ def test_table_rows_directory_and_single_file_layouts(spark, tmp_path):
     assert _table_rows(d, "documents") == 37
 
 
+def test_stream_dir_rejects_nested_table_layout(tmp_path):
+    """A table directory whose part files sit one level down (a partitioned
+    write) stages no link for the flat file-stream source: _stream_dir must
+    raise naming the source, not hand back an empty stream."""
+    import pyarrow as pa
+    import pyarrow.parquet as pa_pq
+
+    from kafka_spark_streaming_eval_spark.streaming.queries import _stream_dir
+
+    src = tmp_path / "sf_nested" / "events.parquet"
+    (src / "event_type=click").mkdir(parents=True)
+    pa_pq.write_table(
+        pa.table({"event_id": [1, 2]}), str(src / "event_type=click" / "part-0.parquet")
+    )
+    with pytest.raises(ValueError, match="events.parquet"):
+        _stream_dir(str(tmp_path / "sf_nested"), "events")
+
+
 def test_stream_tumbling_counts_on_directory_layout_events(spark, tmp_path):
     """The streaming state-sizing path end-to-end over a directory-written
     events table: stream_tumbling_counts must run (not crash in the

@@ -764,7 +764,7 @@ def test_domain_cap_bounds_every_domain(spark):
     actually overflow the cap somewhere (the positive path).  Two-level
     invariants (r6): the level-1 survivor mass is bounded by
     domains*shards*cap and dominates the final kept mass per source."""
-    from kafka_spark_streaming_eval_spark.operators.curation2 import (
+    from kafka_spark_streaming_eval_spark.operators.curation import (
         DOMAIN_CAP,
         DOMAIN_COUNT,
         DOMAIN_SHARDS,
@@ -791,7 +791,7 @@ def test_domain_cap_two_level_equals_one_level(spark):
     from pyspark.sql.window import Window as W
 
     from kafka_spark_streaming_eval_spark.catalog import table
-    from kafka_spark_streaming_eval_spark.operators.curation2 import (
+    from kafka_spark_streaming_eval_spark.operators.curation import (
         DOMAIN_CAP,
         DOMAIN_COUNT,
         _hb,
@@ -853,7 +853,7 @@ def test_priority_sample_matches_hand_computation(spark, tmp_path):
     reproduce the exact sample set, and the heavy doc must be in it."""
     import hashlib
 
-    from kafka_spark_streaming_eval_spark.operators.curation2 import SAMPLE_K
+    from kafka_spark_streaming_eval_spark.operators.curation import SAMPLE_K
     from tests.test_properties import _mini_sf
 
     docs = [(i, "x", "en", "srcP", 10) for i in range(1, 30)]
