@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash).  ``queries()`` lists the registry in
+registration order.
 
 Everything is backed by the query registry in
 ``kafka_spark_streaming_eval_spark.plans.registry``: one named entry per

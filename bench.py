@@ -44,10 +44,6 @@ def _pin_heap() -> None:
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from kafka_spark_streaming_eval_spark.plans.history import (  # noqa: E402
-    bench_timings,
-    round_reports,
-)
 from kafka_spark_streaming_eval_spark.plans.registry import all_queries  # noqa: E402
 from kafka_spark_streaming_eval_spark.session import get_spark  # noqa: E402
 from kafka_spark_streaming_eval_spark.streaming.generator import (  # noqa: E402
@@ -111,9 +107,9 @@ class StealMeter:
     """Delta-based hypervisor-steal measurement over one bench phase.
 
     VERDICT r11 item 1: every committed bench sidecar must be
-    weather-self-describing — BENCH_r11.json carried a 22x throughput_eps
-    artifact that only SCALE.md archaeology could explain because the
-    payload had no steal field.  Construct at phase start, ``finish()`` at
+    weather-self-describing — round 11's bench report carried a 22x
+    throughput_eps artifact that only SCALE.md archaeology could explain
+    because the payload had no steal field.  Construct at phase start, ``finish()`` at
     phase end; the dict is embedded in the payload per phase.
 
     The dict also carries (r14):
@@ -227,84 +223,24 @@ HEADLINE = [
 
 THROUGHPUT_EVENTS = 1_000_000
 
-# Non-headline coverage rotation (VERDICT r5 item 6): each bench run ALSO
-# times TIER2_COUNT non-headline queries once each — never-benched first,
-# then stalest-benched (read from the committed BENCH_r*.json history, the
-# same stalest-first idea as the correctness rotation) — so every registry
-# query earns a committed sf0.1 timing within ~2 rounds instead of the
-# headline 56 being the only measured set.  runs=1 (these are coverage
-# timings, not the churn-audited headline series).
-TIER2_COUNT = 92
-
-
-def _timing_history(here: str) -> list[tuple[int, str, object]]:
-    """``(round, query, seconds)`` from every committed ``BENCH_r<N>.json``
-    under ``here``, oldest first, then the ``BENCH_DETAILS.json`` sidecar
-    as one round newer (it is always at least as new as the newest
-    committed round)."""
-    reports = round_reports("BENCH", here)
-    rows = [(rnd, n, s) for rnd, raw in reports for n, s in bench_timings(raw)]
-    try:
-        with open(os.path.join(here, DETAILS_FILE)) as f:
-            sidecar = json.load(f)
-    except (OSError, ValueError):
-        return rows
-    nxt = max((rnd for rnd, _ in reports), default=0) + 1
-    return rows + [(nxt, n, s) for n, s in bench_timings(sidecar)]
-
-
-def _last_benched_round() -> dict[str, int]:
-    """Per query, the latest committed bench round that timed it (headline or
-    tier2)."""
-    last: dict[str, int] = {}
-    for rnd, name, _ in _timing_history(os.path.dirname(os.path.abspath(__file__))):
-        last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _last_measured_secs(here: str | None = None) -> dict[str, float]:
-    """Per query, the timing from the LATEST round that measured it —
-    the vs-own-last-measured base for the sidecar's ``vs_last`` field
-    (VERDICT r9/r10 item 4: tier2_total swings 2x round-over-round from
-    rotation mix alone, so only a per-query delta against that query's own
-    previous measurement separates a real regression from cohort churn)."""
-    rows = _timing_history(here or os.path.dirname(os.path.abspath(__file__)))
-    return {n: float(s) for _, n, s in rows if isinstance(s, (int, float))}
-
-
-def vs_last_fields(now: dict[str, float], last: dict[str, float]) -> dict:
-    """Sidecar ``vs_last``: for every query timed THIS run that has a prior
-    measurement, its own last-measured seconds and the percent delta —
-    computed from the RAW values, not the 2-dp roundings (ADVICE r10)."""
-    out = {}
-    for name, sec in now.items():
-        prev = last.get(name)
-        if prev and prev > 0:
-            out[name] = {
-                "last_s": round(prev, 4),
-                "delta_pct": round(100.0 * (sec - prev) / prev, 1),
-            }
-    return out
-
-
-def tier2_rotation(specs) -> list[str]:
-    """The TIER2_COUNT non-headline queries to time this run: never-benched
-    first (registration order), then stalest committed timing first."""
-    last = _last_benched_round()
-    pool = [n for n in specs if n not in HEADLINE]
-    idx = {n: i for i, n in enumerate(pool)}
-    pool.sort(key=lambda n: (last.get(n, -1), idx[n]))
-    return pool[:TIER2_COUNT]
+def tier2_names(specs) -> list[str]:
+    """The tier-2 coverage set: every non-headline query, in registration
+    order.  Each bench run times it once per query (runs=1) under a
+    per-attempt wall-clock budget, so unless the budget cuts the pass, two
+    runs' ``tier2_total`` cover the same queries and any two sidecars diff
+    per query.  These are coverage timings, not the churn-audited headline
+    series."""
+    return [n for n in specs if n not in HEADLINE]
 
 
 # The grading driver captures only the LAST ~2000 chars of bench stdout and
-# parses the final JSON line from that window: BENCH_r01..r04 (line lengths
-# 1434..1857) parsed fine, r05 (>2000 after 13 new headline queries) came
-# back "parsed": null with the tail starting mid-line.  The stdout line is
-# therefore BUDGETED.  r14 lesson (VERDICT r14 items 3+2): the old scheme
-# kept every scalar and truncated the QUERIES dict slowest-first, so the
-# ~26 fastest headline timings fell off the line and PERF flagged them as
-# phantom "dropped_from_bench" every round.  Per-query timings are what the
+# parses the final JSON line from that window: the round 1-4 reports (line
+# lengths 1434..1857) parsed fine, round 5's (>2000 after 13 new headline
+# queries) came back "parsed": null with the tail starting mid-line.  The
+# stdout line is therefore BUDGETED.  r14 lesson (VERDICT r14 items 3+2):
+# the old scheme kept every scalar and truncated the QUERIES dict
+# slowest-first, so the ~26 fastest headline timings fell off the line and
+# PERF flagged them as phantom "dropped_from_bench" every round.  Per-query timings are what the
 # grading contract diffs, so they now take priority: the line carries the
 # core contract fields + a small reserved scalar set (the BASELINE-gate
 # stream triple, throughput, headline weather attestation), then EVERY
@@ -312,7 +248,7 @@ def tier2_rotation(specs) -> list[str]:
 # the sidecar), and only then as many remaining scalars as still fit.  The
 # COMPLETE payload is always written to DETAILS_FILE alongside this script.
 # The driver's capture window is EXACTLY 2000 chars and ends with the JSON
-# line + "\n" (measured across every committed BENCH_r*.json tail), so the
+# line + "\n" (measured across every committed round report's tail), so the
 # hard ceiling for a parseable line is 1999 chars; 1985 leaves a margin for
 # stray control chars without giving up the space the 57-query dict needs.
 STDOUT_BUDGET = 1985
@@ -361,7 +297,7 @@ def budget_stdout_payload(full: dict, limit: int = STDOUT_BUDGET) -> dict:
     scalars, then per-query timings (slowest first, 2-dp) until ``limit``
     serialized chars, then optional scalars into whatever room is left.
     ``queries_n``/``queries_omitted`` make any truncation explicit and
-    ``queries_full`` names the sidecar carrying the rest."""
+    ``queries_full`` names the sidecar carrying the rest whenever it fits."""
     slim = {k: full[k] for k in ("metric", "value", "unit", "sf") if k in full}
     for k in STDOUT_RESERVED_SCALARS:
         if k in full:
@@ -370,31 +306,27 @@ def budget_stdout_payload(full: dict, limit: int = STDOUT_BUDGET) -> dict:
     slim["queries"] = {}
     slim["queries_n"] = len(all_q)
     slim["queries_omitted"] = len(all_q)
-    # fast path: the complete query set with no truncation pointer — the
-    # slowest-prefix loop below can wedge 1-2 queries short of this because
-    # its intermediate candidates carry the 36-char queries_full pointer
+    # fast path: the complete query set with no truncation pointer
     whole = dict(slim)
     whole["queries"] = {n: round(s, 2) for n, s in all_q.items()}
     whole["queries_omitted"] = 0
     if len(_enc(whole)) <= limit:
         slim = whole
-    # fill slowest-first by RAW value so the kept set is the slowest prefix;
-    # emitted values are 2-dp (the sidecar keeps full precision)
-    for name, sec in sorted(all_q.items(), key=lambda kv: (-kv[1], kv[0])):
-        if not slim["queries_omitted"]:
-            break
-        candidate = dict(slim)
-        candidate["queries"] = {**slim["queries"], name: round(sec, 2)}
-        candidate["queries_omitted"] = len(all_q) - len(candidate["queries"])
-        if candidate["queries_omitted"]:
-            candidate["queries_full"] = DETAILS_FILE
-        else:
-            candidate.pop("queries_full", None)
-        if len(_enc(candidate)) > limit:
-            break
-        slim = candidate
-    if slim["queries_omitted"]:
-        slim["queries_full"] = DETAILS_FILE
+    else:
+        # truncated: the sidecar pointer is counted BEFORE queries are fitted
+        # (when it fits at all), so it can never push the line over ``limit``
+        pointed = {**slim, "queries_full": DETAILS_FILE}
+        if len(_enc(pointed)) <= limit:
+            slim = pointed
+        # fill slowest-first by RAW value so the kept set is the slowest
+        # prefix; emitted values are 2-dp (the sidecar keeps full precision)
+        for name, sec in sorted(all_q.items(), key=lambda kv: (-kv[1], kv[0])):
+            candidate = dict(slim)
+            candidate["queries"] = {**slim["queries"], name: round(sec, 2)}
+            candidate["queries_omitted"] = len(all_q) - len(candidate["queries"])
+            if len(_enc(candidate)) > limit:
+                break
+            slim = candidate
     for key in STDOUT_OPTIONAL_SCALARS:
         if key not in full or key in slim:
             continue
@@ -958,35 +890,32 @@ def main() -> None:
         run_headline, HEADLINE_STEAL_RETRIES, "headline"
     )
 
-    # tier2 coverage rotation (disable with SPARK_GRAFT_BENCH_TIER2=0).
-    # Wall-clock budgeted (SPARK_GRAFT_BENCH_TIER2_BUDGET_S, default 200 s —
-    # the slowest observed full-92 pass took 125 s under ambient host load,
-    # r7 closing run 3, and a budget cut would delay full-registry timing
-    # coverage by a round) so bench runtime stays bounded as the registry
-    # grows: queries cut by the budget stay never/stalest-benched and lead
-    # the next round's rotation.  The steal gate retries re-run EXACTLY the
-    # set attempt 1 completed, so attempt totals compare the same queries —
-    # i.e. the env var is a PER-ATTEMPT budget (ADVICE r13): a stormy first
-    # attempt triggers one full re-run of the completed set, so worst-case
-    # tier2 wall time is ~(1 + TIER2_STEAL_RETRIES) x the budget.
+    # tier2 coverage (disable with SPARK_GRAFT_BENCH_TIER2=0).  Wall-clock
+    # budgeted (SPARK_GRAFT_BENCH_TIER2_BUDGET_S, default 200 s) so bench
+    # runtime stays bounded as the registry grows: queries past the budget
+    # are not timed this run, and tier2_n records how many were.  The steal
+    # gate retries re-run EXACTLY the set attempt 1 completed, so attempt
+    # totals compare the same queries — i.e. the env var is a PER-ATTEMPT
+    # budget (ADVICE r13): a stormy first attempt triggers one full re-run
+    # of the completed set, so worst-case tier2 wall time is
+    # ~(1 + TIER2_STEAL_RETRIES) x the budget.
     tier2: dict[str, float] = {}
     tier2_weather: dict = {"attempts": [], "kept_attempt": None,
                            "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
                            "selector": "min-total", "gate_cleared": None}
     if os.environ.get("SPARK_GRAFT_BENCH_TIER2", "1") != "0":
         tier2_budget = float(os.environ.get("SPARK_GRAFT_BENCH_TIER2_BUDGET_S", "200"))
-        tier2_names = tier2_rotation(specs)
         completed: list[str] = []
 
         def run_tier2(attempt: int) -> dict[str, float]:
             t: dict[str, float] = {}
             if attempt == 0:
                 t2_start = time.perf_counter()
-                for name in tier2_names:
+                for name in tier2_names(specs):
                     if time.perf_counter() - t2_start > tier2_budget:
                         print(
                             f"bench: tier2 budget {tier2_budget:.0f}s hit after "
-                            f"{len(t)} queries; rest stay stalest for next round",
+                            f"{len(t)} queries; the rest are not timed",
                             file=sys.stderr,
                         )
                         break
@@ -1070,10 +999,6 @@ def main() -> None:
             stream_eps = stream_p95 = recovery_s = None
             stream_isolation = "in-process-invalid"
     total = round(sum(timings.values()), 4)
-    # vs-own-last-measured deltas (read BEFORE this run's sidecar overwrite
-    # destroys the previous measurement): the round-over-round comparability
-    # field — tier2_total is a rotation-mix artifact; these are not.
-    last_measured = _last_measured_secs()
     run_steal = run_meter.finish()
     kept_attempt = throughput_weather["attempts"][
         throughput_weather["kept_attempt"] - 1
@@ -1086,8 +1011,8 @@ def main() -> None:
         "tier2_queries": tier2,
         "tier2_total": round(sum(tier2.values()), 4),
         "tier2_n": len(tier2),
-        "tier2_policy": "stalest-first rotation over non-headline, runs=1",
-        "vs_last": vs_last_fields({**timings, **tier2}, last_measured),
+        "tier2_policy": "every non-headline query once, registration order, "
+        "runs=1, per-attempt wall-clock budget",
         "sf": sf,
         "throughput_eps": round(eps, 1),
         "throughput_events": THROUGHPUT_EVENTS,

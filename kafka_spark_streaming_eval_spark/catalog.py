@@ -146,21 +146,37 @@ def table(
     return df
 
 
-# (path, mtime_ns, size, split conf) -> planned scan partition count.  The
-# probe costs ~45 ms of physical planning per call (df.rdd), and table()
-# runs several times per query build; the layout of a given file cannot
-# change without its (mtime, size) changing.  The planner's split count
-# ALSO depends on session conf (ADVICE r14: maxPartitionBytes and the
-# parallelism-derived openCost packing), so those ride the key — a value
-# cached under one session's conf can't leak into a session planned
-# differently in the same process.
+def table_stamp(path: str) -> str:
+    """Cache key for the table at ``path``: the path plus ``st_mtime_ns`` and
+    ``st_size`` of the file, or, for a directory layout, of each top-level
+    part file by name.  A directory's own stat misses a part file rewritten
+    in place (its mtime moves only when entries are added or removed)."""
+    import os
+
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return f"{path}|{st.st_mtime_ns}|{st.st_size}"
+    parts = []
+    with os.scandir(path) as entries:
+        for entry in sorted(entries, key=lambda e: e.name):
+            if entry.name.endswith(".parquet") and entry.is_file():
+                st = entry.stat()
+                parts.append(f"{entry.name}:{st.st_mtime_ns}:{st.st_size}")
+    return "|".join([path, *parts])
+
+
+# (table_stamp, split conf) -> planned scan partition count.  The probe
+# costs ~45 ms of physical planning per call (df.rdd), and table() runs
+# several times per query build; the layout of a given table cannot change
+# without its stamp changing.  The planner's split count ALSO depends on
+# session conf (ADVICE r14: maxPartitionBytes and the parallelism-derived
+# openCost packing), so those ride the key — a value cached under one
+# session's conf can't leak into a session planned differently in the same
+# process; when the conf cannot be read the count is planned uncached.
 _SCAN_PARTS_CACHE: dict[tuple, int] = {}
 
 
 def _scan_parts(df: DataFrame, path: str) -> int:
-    import os
-
-    st = os.stat(path)
     sess = df.sparkSession
     try:
         conf_key = (
@@ -169,8 +185,8 @@ def _scan_parts(df: DataFrame, path: str) -> int:
             sess.sparkContext.defaultParallelism,
         )
     except Exception:
-        conf_key = ()
-    k = (path, st.st_mtime_ns, st.st_size, conf_key)
+        return df.rdd.getNumPartitions()
+    k = (table_stamp(path), conf_key)
     n = _SCAN_PARTS_CACHE.get(k)
     if n is None:
         n = _SCAN_PARTS_CACHE[k] = df.rdd.getNumPartitions()

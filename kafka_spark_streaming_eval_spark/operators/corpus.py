@@ -1,6 +1,5 @@
 """Corpus-level training-data diagnostics (round-4 additions, registered
-AFTER every earlier query so the driver's never-green rotation order is
-undisturbed — see ``plans/registry.py:all_queries``).
+after every earlier query — see ``plans/registry.py:_load_all``).
 
 Three operators a 100 TB pre-training pipeline runs corpus-wide:
 

@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from kafka_spark_streaming_eval_spark.catalog import table
+from kafka_spark_streaming_eval_spark.catalog import table, table_stamp
 from kafka_spark_streaming_eval_spark.operators.dedup import shingle_rows
 from kafka_spark_streaming_eval_spark.plans.registry import register
 from kafka_spark_streaming_eval_spark.session import iter_checkpoint, prep
@@ -143,7 +143,6 @@ def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFr
     from kafka_spark_streaming_eval_spark.streaming.queries import (
         _ensure_staged,
         _run_to_table,
-        _src_fingerprint,
         _stream_session,
         _table_rows,
     )
@@ -165,7 +164,7 @@ def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFr
             )
 
     staged = _ensure_staged(
-        scratch_dir("stream_contam_src", sf_dir, _src_fingerprint(src)), build
+        scratch_dir("stream_contam_src", sf_dir, table_stamp(src)), build
     )
 
     # The static side (benchmark shingle index) is CACHED for the stream's

@@ -22,19 +22,10 @@ Determinism contract (so Spark and DuckDB hash-match bit-for-bit):
 
 from __future__ import annotations
 
-import ast
-import hashlib
-import inspect
-import json
-import os
-import textwrap
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-from kafka_spark_streaming_eval_spark.plans import history
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -68,190 +59,11 @@ def register(name: str, category: str, oracle: str | None = None):
     return deco
 
 
-# (module, qualname, oracle) -> (weakref-to-__code__, digest).  One entry
-# per registered query NAME, replaced in place on importlib.reload — the
-# pre-r11 scheme put the __code__ object INSIDE the key, so every reload
-# appended a new entry and pinned every historical code object forever
-# (ADVICE r9/r10 finding).  The weakref keeps the change-detection property
-# (a live `ref() is fn.__code__` identity check can never alias a reused
-# CPython id) without pinning: a reloaded module's old code objects get
-# GC'd normally and their entries simply miss on the next lookup.
-_HASH_CACHE: dict[tuple, tuple] = {}
-
-
-def content_hash(spec: QuerySpec) -> str:
-    """Semantic fingerprint of a query: AST-normalized function body (the
-    docstring and decorator list stripped, so doc/comment/formatting edits
-    do NOT change it) + the oracle SQL.
-
-    Used by the verification rotation (VERDICT r6 item 2): a green
-    CORRECTNESS row only counts for the code it actually verified, so a
-    body or oracle rewrite resets the query to never-green and it re-enters
-    the driver budget first.
-    """
-    key = (spec.fn.__module__, spec.fn.__qualname__, spec.oracle)
-    hit = _HASH_CACHE.get(key)
-    if hit is not None:
-        code_ref, cached = hit
-        # identity check against the LIVE code object: after a reload the
-        # old code is GC'd (ref() -> None) or simply a different object,
-        # and either way we recompute instead of serving a stale digest
-        if code_ref() is spec.fn.__code__:
-            return cached
-    try:
-        src = textwrap.dedent(inspect.getsource(spec.fn))
-        tree = ast.parse(src)
-        fndef = tree.body[0]
-        if isinstance(fndef, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            fndef.decorator_list = []  # @register(...) carries name/category
-            fndef.name = "_q"  # a pure rename is not a behavior change
-            body = fndef.body
-            if (
-                body
-                and isinstance(body[0], ast.Expr)
-                and isinstance(body[0].value, ast.Constant)
-                and isinstance(body[0].value.value, str)
-            ):
-                fndef.body = body[1:] or [ast.Pass()]
-        normalized = ast.dump(tree)
-    except (OSError, TypeError, SyntaxError):
-        # source unavailable (exec'd / C-level): fall back to bytecode +
-        # constants — still resets on real behavior changes.  Only the
-        # docstring constant is dropped: stripping ALL strings would let a
-        # behavior change to a string literal (e.g. a column name) keep a
-        # stale green stamp.
-        code = spec.fn.__code__
-        doc = spec.fn.__doc__
-        consts = tuple(
-            c for c in code.co_consts if not (isinstance(c, str) and c == doc)
-        )
-        normalized = repr((code.co_code, consts, code.co_names))
-    digest = hashlib.md5(
-        (normalized + "\x00" + (spec.oracle or "")).encode()
-    ).hexdigest()
-    _HASH_CACHE[key] = (weakref.ref(spec.fn.__code__), digest)
-    return digest
-
-
-def _ledger_path() -> str:
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)), "green_hashes.json")
-
-
-def _green_hash_ledger() -> dict[str, dict]:
-    """name -> {"hash": <content_hash at green time>, "round": N}.
-
-    Committed alongside the code; re-stamped at each round start (after the
-    driver's CORRECTNESS report lands, before any edits) via
-    ``python -m kafka_spark_streaming_eval_spark.plans.registry stamp``.
-    """
-    try:
-        with open(_ledger_path()) as f:
-            ledger = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return ledger if isinstance(ledger, dict) else {}
-
-
-def _is_green_row(name: str, row: object) -> bool:
-    """One CORRECTNESS row verified its query: ``hash_match`` true, or a
-    clean rows-only ("no_oracle") check for a query that STILL has no oracle
-    — once an oracle is added, the stronger hash check must actually run
-    before the query sorts back among the verified."""
-    if not isinstance(row, dict):
-        return False
-    if row.get("hash_match") is True:
-        return True
-    spec = _REGISTRY.get(name)
-    return (
-        row.get("err") == "no_oracle"
-        and row.get("spark_rows") is not None
-        and spec is not None
-        and spec.oracle is None
-    )
-
-
-def _green_rounds(*roots: str) -> dict[str, int]:
-    """Per query, the newest round whose CORRECTNESS report under ``roots``
-    has a green row for it, ignoring the ledger."""
-    _load_all()  # oracle presence feeds the rows-only rule
-    green: dict[str, int] = {}
-    for rnd, report in history.round_reports("CORRECTNESS", *roots):
-        if isinstance(report, dict):
-            for name, row in report.items():
-                if _is_green_row(name, row):
-                    green[name] = max(green.get(name, 0), rnd)
-    return green
-
-
-def _last_green_round() -> dict[str, int]:
-    """Per query, the latest round whose CORRECTNESS report verified it green.
-
-    The per-round driver budget covers a prefix of the ``queries()`` dict, so
-    ordering is coverage policy: queries that have never earned a green
-    CORRECTNESS row must run before queries already verified, and among the
-    verified ones the stalest verification re-runs first.  This reads the
-    committed ``CORRECTNESS_r*.json`` reports (in the cwd and the repo root)
-    so the rotation advances by itself every round.
-
-    A green row only counts for the code it verified (VERDICT r6 item 2):
-    if the query's current content hash differs from the hash recorded in
-    the green-hash ledger at stamp time — or was never stamped at all —
-    the implementation changed (or was never hash-attested) since the
-    driver last saw it, and the query re-enters the rotation never-green.
-    """
-    last_green = _green_rounds(*{os.getcwd(), history.REPO_ROOT})
-    ledger = _green_hash_ledger()
-    for name in list(last_green):
-        spec = _REGISTRY.get(name)
-        if spec is None:
-            continue
-        rec = ledger.get(name)
-        if not isinstance(rec, dict) or rec.get("hash") != content_hash(spec):
-            del last_green[name]
-    return last_green
-
-
-def stamp_green_hashes() -> dict[str, dict]:
-    """Re-stamp the green-hash ledger from the committed CORRECTNESS reports.
-
-    Run at ROUND START, right after the driver's new CORRECTNESS report
-    lands and BEFORE any code edits — at that moment the working tree is
-    exactly the code the driver verified, so stamping current hashes is
-    sound.  Rules per query: first stamp trusts current code at the latest
-    green round; an unchanged hash only advances the round; a changed hash
-    re-stamps ONLY if a green round NEWER than the recorded stamp exists
-    (i.e. the driver re-verified after the rewrite).
-    """
-    ledger = _green_hash_ledger()
-    for name, rnd in sorted(_green_rounds().items()):
-        spec = _REGISTRY.get(name)
-        if spec is None:
-            continue
-        cur = content_hash(spec)
-        rec = ledger.get(name)
-        if not isinstance(rec, dict):
-            ledger[name] = {"hash": cur, "round": rnd}
-        elif rec.get("hash") == cur:
-            rec["round"] = max(int(rec.get("round", 0)), rnd)
-        elif rnd > int(rec.get("round", 0)):
-            ledger[name] = {"hash": cur, "round": rnd}
-    with open(_ledger_path(), "w") as f:
-        json.dump(ledger, f, indent=0, sort_keys=True)
-        f.write("\n")
-    return ledger
-
-
 def all_queries() -> dict[str, QuerySpec]:
-    """Name -> spec for every registered query (imports operator modules).
-
-    Ordered for driver verification rotation: never-green queries first (in
-    registration order), then green queries stalest-verification-first.
-    """
+    """Name -> spec for every registered query (imports operator modules),
+    in registration order."""
     _load_all()
-    last_green = _last_green_round()
-    reg_index = {name: i for i, name in enumerate(_REGISTRY)}
-    ordered = sorted(_REGISTRY, key=lambda n: (last_green.get(n, -1), reg_index[n]))
-    return {name: _REGISTRY[name] for name in ordered}
+    return dict(_REGISTRY)
 
 
 def _load_all() -> None:
@@ -272,21 +84,7 @@ def _load_all() -> None:
     from kafka_spark_streaming_eval_spark.functions import udfs  # noqa: F401
     from kafka_spark_streaming_eval_spark.sources import readers  # noqa: F401
     from kafka_spark_streaming_eval_spark.streaming import queries, stateful  # noqa: F401
-    # import order is registration order, the rotation's tie-break: these
-    # later additions register last
+    # import order is registration order: these later additions register last
     from kafka_spark_streaming_eval_spark.operators import corpus  # noqa: F401
     from kafka_spark_streaming_eval_spark.operators import curation  # noqa: F401
 
-
-if __name__ == "__main__":  # python -m kafka_spark_streaming_eval_spark.plans.registry stamp
-    import sys
-
-    # delegate to the canonical module instance: running under -m executes
-    # THIS file as __main__, whose _REGISTRY the operator imports never touch
-    from kafka_spark_streaming_eval_spark.plans import registry as _canonical
-
-    if len(sys.argv) > 1 and sys.argv[1] == "stamp":
-        ledger = _canonical.stamp_green_hashes()
-        print(f"stamped {len(ledger)} green hashes -> {_canonical._ledger_path()}")
-    else:
-        print("usage: python -m kafka_spark_streaming_eval_spark.plans.registry stamp")

@@ -26,6 +26,7 @@ from kafka_spark_streaming_eval_spark.catalog import (
     events_long_ts_divisor,
     events_ts_ms,
     table,
+    table_stamp,
 )
 from kafka_spark_streaming_eval_spark.functions.numeric import davg, davg_sql, dsum, dsum_sql
 from kafka_spark_streaming_eval_spark.operators.metrics import _EV
@@ -66,15 +67,6 @@ def _ensure_staged(d: str, build) -> str:
     return d
 
 
-def _src_fingerprint(path: str) -> str:
-    """mtime+size content key: a regenerated testdata file at the same path
-    gets a fresh staging dir, so cached sentinels/symlinks can't go stale."""
-    import os
-
-    st = os.stat(path)
-    return f"{st.st_mtime_ns}_{st.st_size}"
-
-
 def _stream_dir(sf_dir: str, name: str) -> str:
     """The parquet file-stream source needs a flat *directory* of data
     files; stage one with symlinks to the (read-only) testdata.
@@ -90,7 +82,7 @@ def _stream_dir(sf_dir: str, name: str) -> str:
     from kafka_spark_streaming_eval_spark.session import scratch_dir
 
     src = f"{sf_dir}/{name}.parquet"
-    d = scratch_dir("stream_src", sf_dir, name, _src_fingerprint(src))
+    d = scratch_dir("stream_src", sf_dir, name, table_stamp(src))
 
     def build(d: str) -> None:
         targets = (
@@ -188,8 +180,7 @@ def _table_rows(sf_dir: str, name: str) -> int:
     import pyarrow.parquet as pa_pq
 
     path = f"{sf_dir}/{name}.parquet"
-    st = os.stat(path)
-    key = f"{path}|{st.st_mtime_ns}|{st.st_size}"
+    key = table_stamp(path)
     n = _TABLE_ROWS_CACHE.get(key)
     if n is None:
         if os.path.isdir(path):
@@ -538,7 +529,7 @@ def _left_outer_staged_dir(spark: SparkSession, sf_dir: str) -> str:
     # PID + content fingerprint: no cross-process races, and regenerated
     # testdata invalidates the cached staging; _ensure_staged serializes
     # concurrent in-process builders.
-    d = scratch_dir("stream_loj", sf_dir, _src_fingerprint(src))
+    d = scratch_dir("stream_loj", sf_dir, table_stamp(src))
 
     def build(d: str) -> None:
         import pyarrow.compute as pc
@@ -828,7 +819,7 @@ def stream_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFr
             )
 
     d = _ensure_staged(
-        scratch_dir("stream_merge_src", sf_dir, _src_fingerprint(src)), build
+        scratch_dir("stream_merge_src", sf_dir, table_stamp(src)), build
     )
     schema = spark.read.parquet(src).schema
     raw = (

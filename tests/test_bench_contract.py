@@ -2,10 +2,9 @@
 
 The driver executes ``python bench.py`` per round and parses its single JSON
 line; these tests pin the parts of that contract that don't need a timed run:
-headline names must resolve in the registry, and the tier-2 coverage rotation
-(VERDICT r5 item 6) must pick never-benched queries first, then the stalest
-committed timing, never a headline query, and must cover the whole
-non-headline pool within two rounds.
+headline names must resolve in the registry, the tier-2 coverage set is every
+non-headline query in registration order, and the stdout line stays inside
+its budget.
 """
 
 from __future__ import annotations
@@ -34,46 +33,16 @@ def test_headline_names_unique():
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
 
 
-def test_tier2_covers_pool_within_two_rounds():
-    pool = [n for n in all_queries() if n not in set(bench.HEADLINE)]
-    assert len(pool) <= 2 * bench.TIER2_COUNT, (
-        f"non-headline pool {len(pool)} exceeds two rotations of "
-        f"TIER2_COUNT={bench.TIER2_COUNT}; raise TIER2_COUNT"
-    )
-
-
-def test_tier2_rotation_never_benched_first_then_stalest(monkeypatch):
-    specs = {n: None for n in ["h1", "a", "b", "c", "d", "e"]}
-    monkeypatch.setattr(bench, "HEADLINE", ["h1"])
-    monkeypatch.setattr(bench, "TIER2_COUNT", 3)
-    # a: benched r5, b: never, c: benched r2, d: never, e: benched r4
-    monkeypatch.setattr(
-        bench, "_last_benched_round", lambda: {"a": 5, "c": 2, "e": 4, "h1": 5}
-    )
-    picked = bench.tier2_rotation(specs)
-    # never-benched (b, d) lead in registration order, then stalest (c r2)
-    assert picked == ["b", "d", "c"]
-    assert "h1" not in picked
-
-
 def test_tier2_rotation_excludes_headline_on_real_registry():
-    specs = dict.fromkeys(all_queries())
-    picked = bench.tier2_rotation(specs)
-    assert len(picked) == min(
-        bench.TIER2_COUNT, len(specs) - len(set(bench.HEADLINE) & set(specs))
-    )
-    assert not set(picked) & set(bench.HEADLINE)
-
-
-def test_last_benched_round_reads_committed_history():
-    last = bench._last_benched_round()
-    # BENCH_r01..r05 are committed; every headline query that has been in
-    # the file since r1 must show a round >= 1 (r01-r04 via the driver's
-    # "parsed" nesting, r05 via tail-regex recovery).
-    assert last.get("tpch_q1_pricing_summary", 0) >= 1
-    # r05's tail ends with queries r01-r04 never timed — recovered by regex
-    assert last.get("quality_mad_outliers", 0) >= 5
-    assert all(isinstance(v, int) for v in last.values())
+    """The tier-2 set is fixed: every non-headline query, once, in
+    registration order."""
+    names = list(all_queries())
+    headline = set(bench.HEADLINE)
+    picked = bench.tier2_names(all_queries())
+    assert not set(picked) & headline
+    assert set(picked) | headline == set(names)
+    assert len(picked) == len(set(picked))
+    assert picked == sorted(picked, key=names.index)
 
 
 def _fake_full_payload(n_queries: int) -> dict:
@@ -86,7 +55,7 @@ def _fake_full_payload(n_queries: int) -> dict:
         "tier2_queries": {f"tier2_{i:03d}": 0.5 for i in range(92)},
         "tier2_total": 46.0,
         "tier2_n": 92,
-        "tier2_policy": "stalest-first rotation over non-headline, runs=1",
+        "tier2_policy": "every non-headline query once, registration order",
         "sf": 0.1,
         "throughput_eps": 1086572.6,
         "throughput_events": 1_000_000,
@@ -150,6 +119,20 @@ def test_budget_keeps_everything_when_small():
     # with room to spare, every optional scalar also rides the line
     for key in ("tier2_total", "stream_isolation", "baseline_recovery_s"):
         assert slim[key] == full[key]
+
+
+def test_budget_sidecar_pointer_never_overruns_limit():
+    """The ``queries_full`` pointer counts against the limit: with room for
+    the contract fields plus 5 chars, a query that does not fit is omitted
+    and the line still ends at or under ``limit``."""
+    full = _fake_full_payload(1)
+    keys = ("metric", "value", "unit", "sf", *bench.STDOUT_RESERVED_SCALARS)
+    base = {k: full[k] for k in keys if k in full}
+    base.update(queries={}, queries_n=1, queries_omitted=1)
+    limit = len(bench._enc(base)) + 5
+    slim = bench.budget_stdout_payload(full, limit)
+    assert len(bench._enc(slim)) <= limit
+    assert slim["queries"] == {} and slim["queries_omitted"] == 1
 
 
 def test_budget_full_headline_registry_never_truncates():
@@ -301,56 +284,11 @@ def test_budget_stdout_payload_serializes_null_stream_fields():
     assert json.loads(line)["stream_isolation"] == "in-process-invalid"
 
 
-def test_last_measured_secs_latest_round_wins(tmp_path):
-    """VERDICT r9/r10 item 4: the vs-last base must be each query's OWN
-    latest measurement across all three payload vintages, with the sidecar
-    (always newest) taking precedence.  The shared history reader sees each
-    vintage's shape: the driver's wrapper, a bare payload, and the tail-only
-    record whose pairs are recovered by regex."""
-    import json
-
-    from kafka_spark_streaming_eval_spark.plans.history import bench_timings
-
-    shapes = {
-        "BENCH_r01.json": {"parsed": {"queries": {"qa": 1.0, "qb": 5.0}}},
-        "BENCH_r02.json": {"queries": {"qa": 2.0}, "tier2_queries": {"qc": 7.0}},
-        # tail-window vintage: values recovered by regex
-        "BENCH_r03.json": {"parsed": None, "tail": '..., "qb": 6.25, "value": 9.9}'},
-        # a core-count variant is not a round report
-        "BENCH_r03_c8.json": {"queries": {"qa": 99.0}},
-    }
-    for name, payload in shapes.items():
-        (tmp_path / name).write_text(json.dumps(payload))
-    assert bench_timings(shapes["BENCH_r01.json"]) == [("qa", 1.0), ("qb", 5.0)]
-    assert bench_timings(shapes["BENCH_r02.json"]) == [("qa", 2.0), ("qc", 7.0)]
-    assert bench_timings(shapes["BENCH_r03.json"]) == [("qb", 6.25), ("value", 9.9)]
-    # an unreadable report still counts its round: the sidecar is round 5
-    (tmp_path / "BENCH_r04.json").write_text("{truncated")
-    (tmp_path / "BENCH_DETAILS.json").write_text(
-        json.dumps({"queries": {"qa": 3.5}})
-    )
-    assert bench._timing_history(str(tmp_path))[-1] == (5, "qa", 3.5)
-    last = bench._last_measured_secs(str(tmp_path))
-    assert last["qa"] == 3.5  # sidecar beats r02
-    assert last["qb"] == 6.25  # tail regex beats r01
-    assert last["qc"] == 7.0
-
-
-def test_vs_last_fields_raw_value_deltas():
-    out = bench.vs_last_fields(
-        {"qa": 1.0215, "qnew": 2.0}, {"qa": 0.4564, "qz": 9.0}
-    )
-    assert set(out) == {"qa"}  # never-measured queries carry no delta
-    assert out["qa"]["last_s"] == 0.4564
-    # computed from raw values: +123.8%, not the 2-dp-rounded +122%
-    assert out["qa"]["delta_pct"] == 123.8
-
-
 def test_vs_last_and_gate_excluded_from_stdout_line():
+    """The nested stream-gate provenance rides the sidecar only."""
     full = _fake_full_payload(20)
-    full["vs_last"] = {"q": {"last_s": 1.0, "delta_pct": 5.0}}
     slim = bench.budget_stdout_payload(full)
-    assert "vs_last" not in slim and "stream_gate" not in slim
+    assert "stream_gate" not in slim
 
 
 # ---------------------------------------------------------------------------

@@ -172,57 +172,36 @@ def test_lsh_bucket_cap_map_side_prune(spark):
     )
 
 
-def test_registry_rotation_unverified_first():
-    """queries() ordering is coverage policy: every query without a green
-    CORRECTNESS row from a past round must precede every verified one, so
-    a prefix-budgeted driver run always verifies new queries first."""
-    from kafka_spark_streaming_eval_spark.plans.registry import (
-        _last_green_round,
-        all_queries,
-    )
-
-    green = _last_green_round()
-    if not green:
-        import pytest
-
-        pytest.skip("no CORRECTNESS_r*.json reports present")
-    order = list(all_queries())
-    positions = {n: i for i, n in enumerate(order)}
-    last_unverified = max(
-        (positions[n] for n in order if n not in green), default=-1
-    )
-    first_green = min(positions[n] for n in order if n in green)
-    assert last_unverified < first_green
-
-
-def test_registry_fallback_root_is_repo_root():
-    """_last_green_round's package-relative fallback must resolve to the
-    repo root (where CORRECTNESS_r*.json live), independent of cwd — one
-    dirname too many lands on the repo's PARENT and rotation silently
-    degrades to registration order."""
+def test_registry_order_is_registration_order_and_reads_no_round_report(
+    monkeypatch,
+):
+    """all_queries() and the driver's queries() list the registry in
+    registration order, and building them opens no committed
+    ``<PREFIX>_r<N>.json`` round report."""
+    import builtins
     import glob
     import os
 
+    import __spark_entry__ as entry
     from kafka_spark_streaming_eval_spark.plans import registry
 
-    here = os.path.abspath(registry.__file__)
-    root = os.path.dirname(os.path.dirname(os.path.dirname(here)))
-    assert os.path.basename(root) != "", root
-    # the fallback root must be the directory that actually holds the reports
-    committed = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-    if not committed:
-        import pytest
+    report = re.compile(r"_r[\d*]+.*\.json")
 
-        pytest.skip("no CORRECTNESS reports committed yet")
-    # and _last_green_round must see them even from a foreign cwd
-    cwd = os.getcwd()
-    try:
-        os.chdir("/tmp")
-        assert registry._last_green_round(), (
-            "rotation found no green rows with cwd outside the repo"
-        )
-    finally:
-        os.chdir(cwd)
+    def guard(real):
+        def wrapped(path, *args, **kwargs):
+            assert not report.search(os.fspath(path)), f"opened {path}"
+            return real(path, *args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(builtins, "open", guard(builtins.open))
+    monkeypatch.setattr(glob, "glob", guard(glob.glob))
+    monkeypatch.setattr(glob, "iglob", guard(glob.iglob))
+
+    registered = list(registry._REGISTRY)
+    assert list(registry.all_queries()) == registered
+    assert list(entry.queries()) == registered
+    assert len(registered) == len(set(registered))
 
 
 def test_decontaminate_broadcasts_eval_set(spark):
@@ -380,128 +359,6 @@ def test_pagerank_lineage_truncated_by_checkpoint(spark):
     assert len(plan) < 4000, f"plan unexpectedly deep ({len(plan)} chars)"
 
 
-def test_content_hash_resets_on_body_or_oracle_change_not_docstring():
-    """VERDICT r6 item 2: the rotation's staleness key must fold in a
-    content hash so a rewritten query re-enters never-green — but pure
-    documentation edits must NOT reset a green stamp."""
-    from kafka_spark_streaming_eval_spark.plans.registry import (
-        QuerySpec,
-        content_hash,
-    )
-
-    def q_base(spark, sf_dir):
-        """doc A"""
-        return spark.range(1)
-
-    def q_docstring_only(spark, sf_dir):
-        """a completely different docstring, same body"""
-        return spark.range(1)
-
-    def q_comment_only(spark, sf_dir):
-        """doc A"""
-        # a new comment does not change behavior
-        return spark.range(1)
-
-    def q_body_change(spark, sf_dir):
-        """doc A"""
-        return spark.range(2)
-
-    base = content_hash(QuerySpec("q", q_base, "SELECT 1", "t"))
-    assert content_hash(QuerySpec("q", q_docstring_only, "SELECT 1", "t")) == base
-    assert content_hash(QuerySpec("q", q_comment_only, "SELECT 1", "t")) == base
-    assert content_hash(QuerySpec("q", q_body_change, "SELECT 1", "t")) != base
-    assert content_hash(QuerySpec("q", q_base, "SELECT 2", "t")) != base
-
-
-def test_ledger_hash_mismatch_resets_query_to_never_green(monkeypatch):
-    """A green CORRECTNESS row only counts for the code it verified: if the
-    ledger's recorded hash no longer matches the query's current content
-    hash, the query must drop out of the green set and sort into the
-    never-green rotation prefix."""
-    from kafka_spark_streaming_eval_spark.plans import registry
-
-    green = registry._last_green_round()
-    assert green, "no green queries — CORRECTNESS reports missing?"
-    victim = sorted(green)[0]
-    fake = dict(registry._green_hash_ledger())
-    fake[victim] = {"hash": "0" * 32, "round": green[victim]}
-    monkeypatch.setattr(registry, "_green_hash_ledger", lambda: fake)
-    green2 = registry._last_green_round()
-    assert victim not in green2
-    names = list(registry.all_queries())
-    first_green = next(i for i, n in enumerate(names) if n in green2)
-    assert names.index(victim) < first_green, (
-        "hash-reset query does not sort into the never-green prefix"
-    )
-
-
-def test_green_hash_ledger_attests_current_code():
-    """Protocol enforcement: every ledger entry's hash must match the
-    query's CURRENT content hash.  Rewriting a registered query makes this
-    fail until the entry is dropped (query re-verifies as never-green) or
-    legitimately re-stamped at round start — forgetting is what let three
-    r6 rewrites keep stale green stamps (VERDICT r6)."""
-    from kafka_spark_streaming_eval_spark.plans import registry
-
-    specs = registry.all_queries()
-    ledger = registry._green_hash_ledger()
-    assert ledger, "green-hash ledger missing"
-    stale = {
-        name
-        for name, rec in ledger.items()
-        if name in specs and rec.get("hash") != registry.content_hash(specs[name])
-    }
-    assert not stale, (
-        f"ledger hash out of date for {sorted(stale)}: the query body/oracle "
-        "changed since its green stamp — drop the ledger entry so it "
-        "re-verifies, or re-stamp at round start"
-    )
-    orphans = set(ledger) - set(specs)
-    assert not orphans, f"ledger entries for unregistered queries: {sorted(orphans)}"
-
-
-def test_rotation_order_never_green_first():
-    """The driver's per-round budget covers a PREFIX of queries(), so the
-    ordering IS the coverage policy: every query without a green
-    CORRECTNESS row must sort before every verified one, and round-N
-    additions (operators/corpus.py, imported last in registry._load_all)
-    must sort after all OLDER never-green queries so they never displace
-    the draining backlog."""
-    from kafka_spark_streaming_eval_spark.plans.registry import (
-        _last_green_round,
-        all_queries,
-    )
-
-    names = list(all_queries())
-    green = _last_green_round()
-    flags = [n in green for n in names]
-    # monotone: once a green query appears, no never-green may follow
-    first_green = flags.index(True) if True in flags else len(flags)
-    assert all(flags[first_green:]), "a never-green query sorts after a green one"
-    never = [n for n in names if n not in green]
-    if never:
-        from kafka_spark_streaming_eval_spark.operators import corpus, curation
-
-        late = {
-            n
-            for n in never
-            if getattr(corpus, n, None) is not None
-            or getattr(curation, n, None) is not None
-        }
-        if late:
-            cutoff = max(
-                (never.index(n) for n in set(never) - late), default=-1
-            )
-            assert all(never.index(n) > cutoff for n in late), (
-                "late-round additions displace the older never-green backlog"
-            )
-    # the whole never-green set must fit inside the driver's 50-query
-    # budget, or some backlog query silently waits another round
-    assert len(never) <= 50, (
-        f"{len(never)} never-green queries exceed the 50-query driver budget"
-    )
-
-
 def test_plan_audit_covers_registry():
     """PLAN_AUDIT.txt can never silently under-cover again (VERDICT r5
     item 5): the audited row names plus the named _EXEC_ON_BUILD
@@ -602,45 +459,6 @@ def test_session_shuffle_sizing_is_scale_adaptive(spark):
     parallelism = spark.sparkContext.defaultParallelism
     assert got == max(8 * parallelism, 64)
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_content_hash_cache_bounded_across_reloads():
-    """ADVICE r9/r10: the content-hash cache must not grow without bound
-    (nor pin historical __code__ objects) when a module is reloaded — one
-    entry per (module, qualname, oracle), replaced in place, old code
-    objects collectable."""
-    import gc
-    import weakref
-
-    from kafka_spark_streaming_eval_spark.plans import registry
-
-    ns: dict = {}
-    src_a = "def q(spark, sf_dir):\n    return spark.range(1)\n"
-    src_b = "def q(spark, sf_dir):\n    return spark.range(2)\n"
-
-    exec(compile(src_a, "<reload-sim>", "exec"), ns)
-    fn_a = ns["q"]
-    spec_a = registry.QuerySpec("q", fn_a, "SELECT 1", "t")
-    before = len(registry._HASH_CACHE)
-    h_a = registry.content_hash(spec_a)
-    assert registry.content_hash(spec_a) == h_a  # cache hit path
-    grew = len(registry._HASH_CACHE) - before
-    assert grew <= 1
-
-    # "reload": same module/qualname/oracle, new code object — the entry is
-    # REPLACED, not appended, and the digest reflects the new body
-    exec(compile(src_b, "<reload-sim>", "exec"), ns)
-    fn_b = ns["q"]
-    spec_b = registry.QuerySpec("q", fn_b, "SELECT 1", "t")
-    h_b = registry.content_hash(spec_b)
-    assert h_b != h_a
-    assert len(registry._HASH_CACHE) - before == grew  # no growth on reload
-
-    # the superseded code object is NOT pinned by the cache
-    code_ref = weakref.ref(fn_a.__code__)
-    del fn_a, spec_a, ns
-    gc.collect()
-    assert code_ref() is None, "cache pinned a superseded __code__ object"
 
 
 def test_iter_checkpoint_default_delegates_to_localcheckpoint(spark, monkeypatch):

@@ -81,3 +81,22 @@ def test_minhash_identical_after_spread(spark):
 def test_spread_key_columns_survive(spark):
     emb = table(spark, SF_DIR, "embeddings")
     assert emb.where(F.col("vec_id").isNotNull()).count() == emb.count()
+
+
+def test_scan_parts_unreadable_conf_is_not_cached():
+    """When the session conf cannot be read, the partition count is planned
+    for this call only: no entry under a key every session would share."""
+    from types import SimpleNamespace
+
+    from kafka_spark_streaming_eval_spark import catalog
+
+    def unreadable(*_args):
+        raise RuntimeError("conf unavailable")
+
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(conf=SimpleNamespace(get=unreadable)),
+        rdd=SimpleNamespace(getNumPartitions=lambda: 3),
+    )
+    before = dict(catalog._SCAN_PARTS_CACHE)
+    assert catalog._scan_parts(df, f"{SF_DIR}/documents.parquet") == 3
+    assert catalog._SCAN_PARTS_CACHE == before

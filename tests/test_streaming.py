@@ -593,6 +593,32 @@ def test_table_rows_directory_and_single_file_layouts(spark, tmp_path):
     assert _table_rows(d, "documents") == 37
 
 
+def test_table_rows_sees_part_file_rewritten_in_place(tmp_path):
+    """Rewriting a part file in place leaves the table directory's mtime
+    unchanged; the row-count cache key must still change with it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pa_pq
+
+    from kafka_spark_streaming_eval_spark.streaming.queries import _table_rows
+
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    for i in range(2):
+        pa_pq.write_table(
+            pa.table({"id": list(range(10))}), str(table_dir / f"part-{i}.parquet")
+        )
+    assert _table_rows(str(tmp_path), "events") == 20
+    dir_stat = os.stat(table_dir)
+    pa_pq.write_table(
+        pa.table({"id": list(range(25))}), str(table_dir / "part-1.parquet")
+    )
+    after = os.stat(table_dir)
+    assert (after.st_mtime_ns, after.st_size) == (
+        dir_stat.st_mtime_ns, dir_stat.st_size
+    )
+    assert _table_rows(str(tmp_path), "events") == 35
+
+
 def test_stream_dir_rejects_nested_table_layout(tmp_path):
     """A table directory whose part files sit one level down (a partitioned
     write) stages no link for the flat file-stream source: _stream_dir must
