@@ -2,7 +2,9 @@
 
 Tables (TESTDATA.md / FIXTURES.md §4): ``region nation customer supplier part
 orders lineitem events documents embeddings`` — one parquet file per table
-under ``{sf_dir}/``.
+under ``{sf_dir}/``, or a directory of part files (``part_files``).  This
+module is the only one that knows a table's on-disk layout: its part files,
+cache stamp, row count and ``events.ts`` encoding.
 
 Scale note: on a production cluster these would be directories of many
 parquet files (optionally partitioned, e.g. ``events`` by day); every reader
@@ -36,7 +38,8 @@ def events_long_ts_divisor(path: str) -> int:
     between driver rounds; if a future vintage stores epoch ms or us as a
     plain long, a hard-coded nanosecond divide would silently corrupt every
     events query.  Magnitude disambiguates exactly (epoch-s ~1.7e9,
-    -ms ~1.7e12, -us ~1.7e15, -ns ~1.7e18 for 2020s dates).
+    -ms ~1.7e12, -us ~1.7e15, -ns ~1.7e18 for 2020s dates), over every
+    row group of every part file.
 
     Returns a positive divisor to ms, or a NEGATIVE value whose magnitude
     is a multiplier to ms (epoch-seconds vintage).
@@ -45,10 +48,12 @@ def events_long_ts_divisor(path: str) -> int:
     try:
         import pyarrow.parquet as pq
 
-        meta = pq.ParquetFile(path).metadata
-        cols = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-        stats = meta.row_group(0).column(cols["ts"]).statistics
-        mx = stats.max if stats is not None else None
+        metas = [pq.ParquetFile(part).metadata for part in part_files(path)]
+        mx = max(
+            m.row_group(g).column(m.schema.names.index("ts")).statistics.max
+            for m in metas
+            for g in range(m.num_row_groups)
+        )
         if isinstance(mx, int):
             if 0 < mx < 100_000_000_000:
                 # Below ~year 5138 in epoch-ms means the values can only be
@@ -104,6 +109,24 @@ def events_ts_ms(df: DataFrame, long_divisor: int = 1_000_000) -> DataFrame:
 _SPREAD_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
+def scan(spark: SparkSession, sf_dir: str, name: str, stream=None) -> DataFrame:
+    """The lazy parquet read of one table, ``events.ts`` normalized: UTC and
+    ``nanosAsLong`` conf, the epoch-unit divisor, ``events_ts_ms``.  Given
+    ``stream`` (table schema -> streaming DataFrame over the same rows), the
+    stream gets that same recipe, so batch and stream differ only in the
+    source."""
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    if stream is not None:
+        df = stream(df.schema)
+    if name == "events":
+        df = events_ts_ms(df, long_divisor=events_long_ts_divisor(path))
+    return df
+
+
 def table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = True
 ) -> DataFrame:
@@ -111,7 +134,7 @@ def table(
 
     ``events.ts`` is truncated to millisecond precision; oracle SQL mirrors
     this with ``date_trunc('milliseconds', ts)`` so both engines compare
-    equal bits (see ``events_ts_ms``).
+    equal bits (see ``scan`` and ``events_ts_ms``).
 
     ``documents`` / ``embeddings`` are spread to session parallelism when
     the scan is under-split (optimization guide §2.5 input skew: the local
@@ -129,40 +152,70 @@ def table(
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        path = f"{sf_dir}/{name}.parquet"
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return events_ts_ms(
-            spark.read.parquet(path), long_divisor=events_long_ts_divisor(path)
-        )
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = scan(spark, sf_dir, name)
     key = _SPREAD_KEYS.get(name)
     if key is not None and spread:
         from kafka_spark_streaming_eval_spark.session import spread_small_scan
 
+        path = f"{sf_dir}/{name}.parquet"
         df = spread_small_scan(df, key, scan_parts=_scan_parts(df, path))
     return df
 
 
-def table_stamp(path: str) -> str:
-    """Cache key for the table at ``path``: the path plus ``st_mtime_ns`` and
-    ``st_size`` of the file, or, for a directory layout, of each top-level
-    part file by name.  A directory's own stat misses a part file rewritten
-    in place (its mtime moves only when entries are added or removed)."""
+def part_files(path: str) -> list[str]:
+    """The parquet files of the table at ``path``: the file itself, or every
+    ``*.parquet`` file under the directory at any depth (hive partition
+    dirs included), sorted, skipping ``_``/``.`` names as Spark does."""
     import os
 
     if not os.path.isdir(path):
-        st = os.stat(path)
-        return f"{path}|{st.st_mtime_ns}|{st.st_size}"
-    parts = []
-    with os.scandir(path) as entries:
-        for entry in sorted(entries, key=lambda e: e.name):
-            if entry.name.endswith(".parquet") and entry.is_file():
-                st = entry.stat()
-                parts.append(f"{entry.name}:{st.st_mtime_ns}:{st.st_size}")
-    return "|".join([path, *parts])
+        return [path]
+    found = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        found += [f"{root}/{f}" for f in files if f.endswith(".parquet")
+                  and not f.startswith(("_", "."))]
+    return sorted(found)
+
+
+def table_stamp(path: str) -> str:
+    """Cache key for the table at ``path``: the path plus the name,
+    ``st_mtime_ns`` and ``st_size`` of each of its ``part_files``.  A
+    directory's own stat misses a part file rewritten in place (its mtime
+    moves only when entries are added or removed), nested ones included."""
+    import os
+
+    stats = [(p, os.stat(p)) for p in part_files(path)]
+    return "|".join([path] + [f"{p}:{s.st_mtime_ns}:{s.st_size}" for p, s in stats])
+
+
+_TABLE_ROWS_CACHE: dict[str, int] = {}
+
+
+def table_rows(sf_dir: str, name: str) -> int:
+    """Row count of a testdata table from its part files' parquet footers
+    (no scan), whatever the layout; cached per ``table_stamp``."""
+    import pyarrow.parquet as pq
+
+    path = f"{sf_dir}/{name}.parquet"
+    key = table_stamp(path)
+    n = _TABLE_ROWS_CACHE.get(key)
+    if n is None:
+        n = _TABLE_ROWS_CACHE[key] = sum(
+            pq.ParquetFile(part).metadata.num_rows for part in part_files(path)
+        )
+    return n
+
+
+def write_part(t, dest: str, like: str) -> None:
+    """Write pyarrow table ``t`` (rows of the table at ``like``) as a parquet
+    file that scans with that table's schema: Spark's default INT96
+    timestamps stay INT96, not TIMESTAMP(NANOS), a long under nanosAsLong."""
+    import pyarrow.parquet as pq
+
+    schema = pq.ParquetFile(part_files(like)[0]).schema
+    int96 = any(c.physical_type == "INT96" for c in schema)
+    pq.write_table(t, dest, use_deprecated_int96_timestamps=int96)
 
 
 # (table_stamp, split conf) -> planned scan partition count.  The probe

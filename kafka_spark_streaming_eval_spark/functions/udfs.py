@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
-from kafka_spark_streaming_eval_spark.catalog import table
+from kafka_spark_streaming_eval_spark.catalog import table, table_rows
 from kafka_spark_streaming_eval_spark.operators.metrics import _EV
 from kafka_spark_streaming_eval_spark.plans.registry import register
 from kafka_spark_streaming_eval_spark.session import prep
@@ -223,11 +223,9 @@ def udf_cogroup_merge_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(prep(spark), sf_dir, "events").withColumn(
         "ts_ms", F.unix_millis(F.col("ts").cast("timestamp"))
     )
-    from kafka_spark_streaming_eval_spark.streaming.queries import _table_rows
-
     nb = max(
         spark.sparkContext.defaultParallelism,
-        _table_rows(sf_dir, "events") // 50_000 + 1,
+        table_rows(sf_dir, "events") // 50_000 + 1,
     )
     clicks = (
         ev.where(F.col("event_type") == "click")

@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from kafka_spark_streaming_eval_spark.catalog import table, table_stamp
+from kafka_spark_streaming_eval_spark.catalog import table, table_rows
 from kafka_spark_streaming_eval_spark.operators.dedup import shingle_rows
 from kafka_spark_streaming_eval_spark.plans.registry import register
 from kafka_spark_streaming_eval_spark.session import iter_checkpoint, prep
@@ -116,8 +116,8 @@ def _bucket_sql(expr: str) -> str:
 )
 def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest-time benchmark decontamination, executed BY THE STREAMING
-    ENGINE: documents arrive in 4 micro-batches (file source,
-    ``maxFilesPerTrigger=1``) and each batch's per-doc DISTINCT 3-shingles
+    ENGINE: documents arrive in 2 micro-batches (``file_stream``'s 4
+    splits, two per trigger) and each batch's per-doc DISTINCT 3-shingles
     join a static benchmark shingle set (source `src1`) as they
     land — the streaming form of ``text_contamination_matrix``, catching
     benchmark bleed before a document ever reaches the training mix.
@@ -135,37 +135,17 @@ def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: static side ~|benchmark shingles| rows broadcast once per
     micro-batch; stream side is map-only until the keyed counting agg —
     state is O(contaminated docs), not O(corpus)."""
-    import os
-
-    import pyarrow.parquet as pa_pq
-
-    from kafka_spark_streaming_eval_spark.session import scratch_dir
     from kafka_spark_streaming_eval_spark.streaming.queries import (
-        _ensure_staged,
         _run_to_table,
         _stream_session,
-        _table_rows,
+        file_stream,
     )
 
-    prep(spark)
     # Isolated session for the stream (ADVICE r14): state-store partition
     # sizing lives on its own SQLConf instead of a set/run/restore on the
     # shared session.  The static side below is built on it too — the
     # cache is SparkContext-shared, so nothing changes operationally.
-    spark = _stream_session(spark, _table_rows(sf_dir, "documents"))
-    src = f"{sf_dir}/documents.parquet"
-
-    def build(d: str) -> None:
-        t = pa_pq.read_table(src)
-        step = (t.num_rows + 3) // 4
-        for i in range(4):
-            pa_pq.write_table(
-                t.slice(i * step, step), os.path.join(d, f"part_{i}.parquet")
-            )
-
-    staged = _ensure_staged(
-        scratch_dir("stream_contam_src", sf_dir, table_stamp(src)), build
-    )
+    spark = _stream_session(spark, table_rows(sf_dir, "documents"))
 
     # The static side (benchmark shingle index) is CACHED for the stream's
     # lifetime: a stream-static join re-evaluates the static plan every
@@ -190,7 +170,6 @@ def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFr
     try:
         bench.count()  # materialize before the first trigger
 
-        schema = spark.read.parquet(src).schema
         # 2 files per trigger (VERDICT r14 item 5): the bounded replay's
         # per-micro-batch cost is planning + state load/commit, which at
         # sf0.1 dominates the map work — its 8->32-core ratio was 0.84
@@ -199,12 +178,9 @@ def stream_incremental_contamination(spark: SparkSession, sf_dir: str) -> DataFr
         # batch 2 updating batch 1's complete-mode state) and was
         # interleaved-A/B-measured at ~2x on the stream segment (3.26 s ->
         # 1.87 s best-of-4 under equal weather; identical output rows).
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(staged)
-            .where(F.col("source") != BENCH_SOURCE)
-        )
+        stream = file_stream(
+            spark, sf_dir, "documents", splits=4, max_files=2
+        ).where(F.col("source") != BENCH_SOURCE)
         # Materialize the token array BEFORE the transform lambda: an inline
         # expression would re-evaluate split(lower(text)) on every element
         # access — O(tokens^2) per document (the shingle_rows contract).

@@ -18,15 +18,18 @@ from __future__ import annotations
 
 import itertools
 import threading
+from contextlib import suppress
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_spark_streaming_eval_spark.catalog import (
-    events_long_ts_divisor,
-    events_ts_ms,
+    part_files,
+    scan,
     table,
+    table_rows,
     table_stamp,
+    write_part,
 )
 from kafka_spark_streaming_eval_spark.functions.numeric import davg, davg_sql, dsum, dsum_sql
 from kafka_spark_streaming_eval_spark.operators.metrics import _EV
@@ -67,58 +70,83 @@ def _ensure_staged(d: str, build) -> str:
     return d
 
 
-def _stream_dir(sf_dir: str, name: str) -> str:
-    """The parquet file-stream source needs a flat *directory* of data
-    files; stage one with symlinks to the (read-only) testdata.
-
-    Handles both table layouts (VERDICT r14 item 1): a single parquet file
-    (driver testdata — one symlink) and a directory of part files (every
-    Spark-written table — one symlink per part file, flattened, because the
-    file stream source does not recurse into subdirectories by default).
-    A table directory with no top-level part file (nested or partitioned
-    layouts) raises ``ValueError`` instead of streaming an empty result."""
+def _flat_parts(src: str) -> list[str]:
+    """``part_files(src)``, for a staging recipe that copies or links part
+    files into one flat directory.  A hive-nested table keeps its partition
+    columns in directory names, which a flat copy would lose, so it raises
+    naming the table instead of streaming nulls."""
     import os
 
-    from kafka_spark_streaming_eval_spark.session import scratch_dir
+    parts = part_files(src)
+    if os.path.isdir(src) and any(os.path.dirname(p) != src for p in parts):
+        raise ValueError(
+            f"{src}: part files sit in partition directories; a flat staged "
+            "copy would drop the partition columns"
+        )
+    return parts
+
+
+def file_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    splits: int | None = None,
+    max_files: int | None = None,
+) -> DataFrame:
+    """Bounded file stream over one testdata table, normalized exactly like
+    the batch read (``catalog.scan``): the stream and the batch differ only
+    in the source (SURVEY §7 'format is the only difference').
+
+    - A directory table, unsplit, streams the table directory itself; the
+      file source reads a flat directory and a hive-nested one with its
+      partition columns.
+    - A single-file table, unsplit, streams a staged directory holding one
+      symlink to it (the file source's path must be a directory).
+    - ``splits=k`` stages k contiguous slices of the rows, in
+      ``part_files`` order, once per ``table_stamp``; with
+      ``maxFilesPerTrigger`` (``max_files``) that fixes the micro-batch
+      count whatever the table's layout.  A hive-nested table raises
+      (``_flat_parts``).
+
+    Staging dirs come from ``session.scratch_dir``, looked up per call."""
+    import os
+
+    from kafka_spark_streaming_eval_spark import session
 
     src = f"{sf_dir}/{name}.parquet"
-    d = scratch_dir("stream_src", sf_dir, name, table_stamp(src))
+    if splits is None and os.path.isdir(src):
+        d = src
+    else:
+        parts = _flat_parts(src)
 
-    def build(d: str) -> None:
-        targets = (
-            [
-                (os.path.join(src, f), f)
-                for f in sorted(os.listdir(src))
-                if f.endswith(".parquet")
-            ]
-            if os.path.isdir(src)
-            else [(src, f"{name}.parquet")]
+        def build(d: str) -> None:
+            if splits is None:
+                with suppress(FileExistsError):  # left by an interrupted build
+                    os.symlink(src, os.path.join(d, f"{name}.parquet"))
+                return
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            t = pa.concat_tables([pq.read_table(p) for p in parts])
+            step = -(-t.num_rows // splits)
+            for i in range(splits):
+                write_part(
+                    t.slice(i * step, step), os.path.join(d, f"part_{i}.parquet"), src
+                )
+
+        d = _ensure_staged(
+            session.scratch_dir(
+                "stream_src", sf_dir, name, str(splits), table_stamp(src)
+            ),
+            build,
         )
-        if not targets:
-            raise ValueError(
-                f"{src}: no top-level *.parquet part files to stream "
-                "(nested or partitioned table directories are not supported)"
-            )
-        for target, link_name in targets:
-            try:
-                os.symlink(target, os.path.join(d, link_name))
-            except FileExistsError:
-                pass  # leftover from an interrupted build; same target
 
-    return _ensure_staged(d, build)
-
-
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table (ms-truncated ts like the
-    batch catalog).  The file source replays the parquet as micro-batches —
-    same code path as Kafka minus the network (SURVEY §7 'format is the only
-    difference')."""
-    prep(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = spark.readStream.schema(schema).parquet(_stream_dir(sf_dir, "events"))
-    return events_ts_ms(
-        raw, long_divisor=events_long_ts_divisor(f"{sf_dir}/events.parquet")
+    opts = {} if max_files is None else {"maxFilesPerTrigger": max_files}
+    return scan(
+        spark,
+        sf_dir,
+        name,
+        lambda s: spark.readStream.schema(s).options(**opts).parquet(d),
     )
 
 
@@ -164,39 +192,6 @@ def _stream_session(
     return iso
 
 
-_TABLE_ROWS_CACHE: dict[str, int] = {}
-
-
-def _table_rows(sf_dir: str, name: str) -> int:
-    """Row count of a testdata table from parquet metadata (no scan).
-
-    Handles BOTH layouts a parquet table ships in: a single file (the
-    driver's testdata) and a directory of part files (what every Spark
-    write — and therefore every real deployment — produces).  VERDICT r14
-    item 1: the single-file assumption crashed all 9 streaming query paths
-    on directory-layout tables."""
-    import os
-
-    import pyarrow.parquet as pa_pq
-
-    path = f"{sf_dir}/{name}.parquet"
-    key = table_stamp(path)
-    n = _TABLE_ROWS_CACHE.get(key)
-    if n is None:
-        if os.path.isdir(path):
-            n = 0
-            for root, _dirs, files in os.walk(path):
-                for fname in files:
-                    if fname.endswith(".parquet"):
-                        n += pa_pq.ParquetFile(
-                            os.path.join(root, fname)
-                        ).metadata.num_rows
-        else:
-            n = pa_pq.ParquetFile(path).metadata.num_rows
-        _TABLE_ROWS_CACHE[key] = n
-    return n
-
-
 def _run_to_table(stream_df: DataFrame, mode: str) -> DataFrame:
     """Drive a streaming aggregation to completion; return the result table.
 
@@ -236,7 +231,8 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     THE STREAMING ENGINE (file source -> window agg -> memory sink,
     complete mode), then compared against the batch oracle — the
     batch/stream equivalence gate."""
-    ev = _events_stream(_stream_session(spark, _table_rows(sf_dir, "events")), sf_dir)
+    iso = _stream_session(spark, table_rows(sf_dir, "events"))
+    ev = file_stream(iso, sf_dir, "events")
     agg = ev.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.count(F.lit(1)).alias("n"), dsum("value").alias("total_value")
     )
@@ -268,7 +264,8 @@ def stream_sliding_throughput(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding window (12h window, 6h slide): every event lands in exactly
     two windows; throughput = events per window second (generalizes the
     reference's batch_events / trigger_sec)."""
-    ev = _events_stream(_stream_session(spark, _table_rows(sf_dir, "events")), sf_dir)
+    iso = _stream_session(spark, table_rows(sf_dir, "events"))
+    ev = file_stream(iso, sf_dir, "events")
     agg = ev.groupBy(F.window("ts", "12 hours", "6 hours")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -295,9 +292,8 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     the watermark bounds the dedup state — the unbounded-stream-safe version
     of dropDuplicates.  Oracle: distinct count per type on the clean input."""
     # doubled input: dedup state holds ~2x the events rows inside the watermark
-    ev = _events_stream(
-        _stream_session(spark, 2 * _table_rows(sf_dir, "events")), sf_dir
-    )
+    iso = _stream_session(spark, 2 * table_rows(sf_dir, "events"))
+    ev = file_stream(iso, sf_dir, "events")
     doubled = ev.unionByName(ev)
     deduped = doubled.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -428,10 +424,10 @@ def stream_static_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled against the stream.  Windowed agg counts events above their
     type's historical average.  The average is decimal-exact (davg) so both
     engines compare the same bits."""
-    iso = _stream_session(spark, _table_rows(sf_dir, "events"))
+    iso = _stream_session(spark, table_rows(sf_dir, "events"))
     ev_static = table(iso, sf_dir, "events")
     stats = ev_static.groupBy("event_type").agg(davg("value").alias("avg_value"))
-    stream = _events_stream(iso, sf_dir)
+    stream = file_stream(iso, sf_dir, "events")
     enriched = stream.join(F.broadcast(stats), "event_type")
     agg = enriched.groupBy(F.window("ts", "1 day"), "event_type").agg(
         F.sum(F.when(F.col("value") > F.col("avg_value"), 1).otherwise(0)).alias(
@@ -473,35 +469,33 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The oracle is the identical join as plain batch SQL — batch/stream
     equivalence for the two-stream stateful operator."""
-    iso = _stream_session(spark, 2 * _table_rows(sf_dir, "events"))
-    clicks = (
-        _events_stream(iso, sf_dir)
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 day")
+    iso = _stream_session(spark, 2 * table_rows(sf_dir, "events"))
+    return _click_view_join(
+        lambda: file_stream(iso, sf_dir, "events").withWatermark("ts", "1 day"),
+        "inner",
     )
-    views = (
-        _events_stream(iso, sf_dir)
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 day")
+
+
+def _click_view_join(side, how: str) -> DataFrame:
+    """Each click joined (``how``) to the same user's views from the
+    preceding 6 h, run to completion; clicks and views each read their own
+    watermarked ``side()`` stream."""
+    clicks = side().where(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("click_ts")
+    )
+    views = side().where(F.col("event_type") == "view").select(
+        F.col("event_id").alias("view_id"),
+        F.col("user_id").alias("v_user_id"),
+        F.col("ts").alias("view_ts"),
     )
     joined = clicks.join(
         views,
         (F.col("user_id") == F.col("v_user_id"))
         & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 6 HOURS"))
         & (F.col("view_ts") <= F.col("click_ts")),
+        how,
     )
-    out = _run_to_table(joined, "append")
-    return out.select(
+    return _run_to_table(joined, "append").select(
         "click_id",
         "view_id",
         "user_id",
@@ -509,37 +503,41 @@ def stream_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _left_outer_staged_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Stage a stream directory for the left-outer join: the real events
-    file plus three far-future single-row sentinel files.  Structured
-    Streaming only emits null-padded unmatched rows when a LATER batch
-    runs with an advanced watermark; sentinel batches advance it and
-    subsequent batches run eviction under it (empirically the flush lands
-    two batches behind the last data batch).  (``maxFilesPerTrigger=1``
-    turns each file into its own micro-batch.)"""
+def _left_outer_staged_dir(sf_dir: str) -> tuple[str, int]:
+    """Stage a stream directory for the left-outer join: links to the
+    events table's part files plus three far-future single-row sentinel
+    files.  Structured Streaming only emits null-padded unmatched rows when
+    a LATER batch runs with an advanced watermark; sentinel batches advance
+    it and later batches (or the engine's no-data batch) run eviction under
+    it.  Returns the dir and its part-file count, the ``maxFilesPerTrigger``
+    that puts every data row in the first batch: a later data batch would
+    find its rows behind the watermark and drop them."""
     import os
     import time
 
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from kafka_spark_streaming_eval_spark.session import scratch_dir
+    from kafka_spark_streaming_eval_spark import session
 
     src = f"{sf_dir}/events.parquet"
-    # PID + content fingerprint: no cross-process races, and regenerated
-    # testdata invalidates the cached staging; _ensure_staged serializes
-    # concurrent in-process builders.
-    d = scratch_dir("stream_loj", sf_dir, table_stamp(src))
+    parts = _flat_parts(src)
+    # PID + content stamp: no cross-process races, and regenerated testdata
+    # invalidates the cached staging; _ensure_staged serializes concurrent
+    # in-process builders.
+    d = session.scratch_dir("stream_loj", sf_dir, table_stamp(src))
 
     def build(d: str) -> None:
-        import pyarrow.compute as pc
-
-        try:
-            os.symlink(src, os.path.join(d, "events.parquet"))
-        except FileExistsError:
-            pass  # leftover from an interrupted build; same target
-        orig = pq.read_table(src)
-        max_ts = pc.max(orig.column("ts").cast(pa.int64())).as_py()
+        for part in parts:
+            with suppress(FileExistsError):  # left by an interrupted build
+                os.symlink(part, os.path.join(d, os.path.basename(part)))
+        schema = pq.read_schema(parts[0])
+        max_ts = max(
+            pc.max(pq.read_table(p, columns=["ts"]).column("ts").cast(pa.int64()))
+            .as_py()
+            for p in parts
+        )
         decade_ns = 10 * 365 * 24 * 3600 * 1_000_000_000
         for i, name in enumerate(
             ["sentinel_a.parquet", "sentinel_b.parquet", "sentinel_c.parquet"]
@@ -548,29 +546,23 @@ def _left_outer_staged_dir(spark: SparkSession, sf_dir: str) -> str:
             # side's event_type filter (pushed below the watermark operator)
             # or the watermark never advances; user_id -1 marks them for
             # removal from the final result
-            row = {
-                "event_id": [-(2 * i + 1), -(2 * i + 2)],
-                "ts": [max_ts + (i + 1) * decade_ns] * 2,
-                "user_id": [-1, -1],
-                "event_type": ["click", "view"],
-                "value": [0.0, 0.0],
-                "props": ["{}", "{}"],
-            }
             t = pa.table(
                 {
-                    f.name: pa.array(row[f.name], type=pa.int64()).cast(f.type)
-                    if pa.types.is_timestamp(f.type)
-                    else pa.array(row[f.name], type=f.type)
-                    for f in orig.schema
+                    "event_id": [-(2 * i + 1), -(2 * i + 2)],
+                    "ts": [max_ts + (i + 1) * decade_ns] * 2,
+                    "user_id": [-1, -1],
+                    "event_type": ["click", "view"],
+                    "value": [0.0, 0.0],
+                    "props": ["{}", "{}"],
                 },
-                schema=orig.schema,
+                schema=schema,
             )
             path = os.path.join(d, name)
-            pq.write_table(t, path)
+            write_part(t, path, src)
             # file source orders batches by mod time: sentinels strictly after
             os.utime(path, (time.time() + 10 * (i + 1), time.time() + 10 * (i + 1)))
 
-    return _ensure_staged(d, build)
+    return _ensure_staged(d, build), len(parts)
 
 
 @register(
@@ -600,53 +592,21 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     by the 6 h interval + watermark delay.  The oracle is the identical
     LEFT JOIN in batch SQL — batch/stream equivalence including the null
     rows."""
-    iso = _stream_session(spark, 2 * _table_rows(sf_dir, "events"))
-    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    staged = _left_outer_staged_dir(iso, sf_dir)
-    schema = iso.read.parquet(f"{sf_dir}/events.parquet").schema
+    iso = _stream_session(spark, 2 * table_rows(sf_dir, "events"))
+    staged, n_data = _left_outer_staged_dir(sf_dir)
 
     def side() -> DataFrame:
-        raw = (
-            iso.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(staged)
-        )
-        return events_ts_ms(
-            raw, long_divisor=events_long_ts_divisor(f"{sf_dir}/events.parquet")
+        return scan(
+            iso,
+            sf_dir,
+            "events",
+            lambda s: iso.readStream.schema(s)
+            .option("maxFilesPerTrigger", n_data)
+            .parquet(staged),
         ).withWatermark("ts", "1 hour")
 
-    clicks = (
-        side()
-        .where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    views = (
-        side()
-        .where(F.col("event_type") == "view")
-        .select(
-            F.col("event_id").alias("view_id"),
-            F.col("user_id").alias("v_user_id"),
-            F.col("ts").alias("view_ts"),
-        )
-    )
-    joined = clicks.join(
-        views,
-        (F.col("user_id") == F.col("v_user_id"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 6 HOURS"))
-        & (F.col("view_ts") <= F.col("click_ts")),
-        "leftOuter",
-    )
-    out = _run_to_table(joined, "append")
-    return out.where(F.col("user_id") >= 0).select(
-        "click_id",
-        "view_id",
-        "user_id",
-        (F.unix_millis("click_ts") - F.unix_millis("view_ts")).alias("gap_ms"),
-    )
+    # user_id -1 marks the sentinel rows
+    return _click_view_join(side, "leftOuter").where(F.col("user_id") >= 0)
 
 
 @register(
@@ -787,8 +747,8 @@ def stream_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     """Streaming upsert into a serving table via ``foreachBatch`` — the
     production pattern for maintaining per-key state (latest event + running
     count per user) in a table a downstream service reads, when the sink has
-    no native streaming MERGE.  The events file is staged as 4 splits with
-    ``maxFilesPerTrigger=1``, so the merge genuinely runs once per
+    no native streaming MERGE.  The events stream is ``file_stream``'s
+    4 splits, one per trigger, so the merge genuinely runs once per
     micro-batch: each batch pre-aggregates per user (count + max
     (ts, event_id, value) struct — an argmax that is total-ordered, so batch
     boundaries can never flip it), full-outer-joins the running target, and
@@ -802,32 +762,9 @@ def stream_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     ``MERGE INTO`` runs under foreachBatch)."""
     import os
 
-    import pyarrow.parquet as pa_pq
-
     from kafka_spark_streaming_eval_spark.session import scratch_dir
 
-    prep(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = f"{sf_dir}/events.parquet"
-
-    def build(d: str) -> None:
-        t = pa_pq.read_table(src)
-        step = (t.num_rows + 3) // 4
-        for i in range(4):
-            pa_pq.write_table(
-                t.slice(i * step, step), os.path.join(d, f"part_{i}.parquet")
-            )
-
-    d = _ensure_staged(
-        scratch_dir("stream_merge_src", sf_dir, table_stamp(src)), build
-    )
-    schema = spark.read.parquet(src).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
-    )
-    ev = events_ts_ms(raw, long_divisor=events_long_ts_divisor(src))
+    ev = file_stream(prep(spark), sf_dir, "events", splits=4, max_files=1)
     run_id = next(_name_counter)
     tgt_root = scratch_dir("stream_merge_tgt", sf_dir, str(run_id))
     ckpt = scratch_dir("stream_merge_ckpt", sf_dir, str(run_id))
@@ -923,7 +860,7 @@ def stream_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition the window by source and the shuffle keys by it."""
     from pyspark.sql import Window as W
 
-    ev = events_ts_ms(table(prep(spark), sf_dir, "events"))
+    ev = table(prep(spark), sf_dir, "events")
     w = W.orderBy("event_id").rowsBetween(W.unboundedPreceding, 0)
     late = ev.select(
         "event_type",

@@ -13,7 +13,7 @@ receives one group's batch rows as Arrow-backed pandas frames — vectorized,
 no per-row boundary crossing.
 
 Correctness: the query runs a deterministic multi-batch file stream
-(``maxFilesPerTrigger=2`` over a fixed 4-file layout), and the final state
+(``file_stream``'s 4 splits, 2 per trigger), and the final state
 per key must equal the batch answer ``count(*) GROUP BY user_id`` — which is
 exactly the DuckDB oracle.  Emitted counts are monotone per key, so
 ``max`` over the update-mode emissions recovers the final state.
@@ -27,17 +27,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from kafka_spark_streaming_eval_spark.catalog import table
+from kafka_spark_streaming_eval_spark.catalog import table_rows
 from kafka_spark_streaming_eval_spark.plans.registry import register
-from kafka_spark_streaming_eval_spark.session import fresh_scratch_dir, prep
+from kafka_spark_streaming_eval_spark.streaming.queries import (
+    _stream_session,
+    file_stream,
+)
 
 _sink_counter = itertools.count()
 
 
-def running_count_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """Streaming per-user running event count over a parquet file stream,
-    two files per micro-batch (2 batches over the fixed 4-file layout),
-    state carried across batches.
+def running_count_stream(stream: DataFrame) -> DataFrame:
+    """Streaming per-user running event count over a ``user_id`` stream;
+    the exhibit feeds it 2 micro-batches (``file_stream``'s 4 splits, two
+    per trigger), state carried across batches.
 
     Batch sizing is a measured micro-batch-overhead decision (guide §2.6 /
     r15): per-batch planning + state commit cost ~1.1 s each at sf0.1
@@ -57,11 +60,6 @@ def running_count_stream(spark: SparkSession, src_dir: str) -> DataFrame:
         state.update((total,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [total]})
 
-    stream = (
-        spark.readStream.schema("user_id long, event_id long")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src_dir)
-    )
     return stream.groupBy("user_id").applyInPandasWithState(
         update_count,
         outputStructType="user_id long, n_events long",
@@ -82,33 +80,22 @@ def running_count_stream(spark: SparkSession, src_dir: str) -> DataFrame:
 )
 def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``applyInPandasWithState`` end-to-end: 2 deterministic micro-batches
-    (4 staged files, 2 per trigger), per-user counter state carried across
-    them; the final state (max of the monotone update emissions) must equal
-    the batch ``count(*)`` — proving exactly-once state accumulation across
-    batch boundaries."""
-    spark = prep(spark)
-    # fresh_scratch_dir + a call-unique sink name: the staged source must
-    # never be rmtree'd/overwritten under a live lazily-scanned plan, and a
-    # second concurrent call must not collide on the memory-sink queryName
-    # (the same hardening applied to every stream_*/src_* staging site).
-    base = fresh_scratch_dir("stateful_src", sf_dir)
-    ev = table(spark, sf_dir, "events").select("user_id", "event_id")
-    ev.repartition(4).write.mode("overwrite").parquet(base)
-    from kafka_spark_streaming_eval_spark.streaming.queries import _table_rows
-
-    ev_rows = _table_rows(sf_dir, "events")
-
+    (``file_stream``'s 4 splits, 2 per trigger), per-user counter state
+    carried across them; the final state (max of the monotone update
+    emissions) must equal the batch ``count(*)`` — proving exactly-once
+    state accumulation across batch boundaries."""
+    # A call-unique sink name: a second concurrent call must not collide
+    # on the memory-sink queryName.  State partitioning is sized to the
+    # replayed input, not the session default (see
+    # streaming.queries.STATE_ROWS_PER_PART: 32 near-empty stores paid a
+    # per-batch load/commit/fsync cycle each), on an ISOLATED session
+    # (ADVICE r14: the set/run/restore on the shared session leaked to
+    # concurrently planned queries).
     name = f"stateful_out_{next(_sink_counter)}"
-    # Size state partitioning to the replayed input, not the session default
-    # (see streaming.queries.STATE_ROWS_PER_PART: 32 near-empty stores paid
-    # a per-batch load/commit/fsync cycle each, x4 batches here).  The
-    # sizing lives on an ISOLATED session (ADVICE r14: the set/run/restore
-    # on the shared session leaked to concurrently planned queries).
-    from kafka_spark_streaming_eval_spark.streaming.queries import _stream_session
-
-    iso = _stream_session(spark, ev_rows)
+    iso = _stream_session(spark, table_rows(sf_dir, "events"))
+    events = file_stream(iso, sf_dir, "events", splits=4, max_files=2)
     q = (
-        running_count_stream(iso, base)
+        running_count_stream(events.select("user_id"))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")

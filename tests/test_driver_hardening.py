@@ -94,8 +94,8 @@ def test_concurrent_stateful_running_count(spark, ducks):
     under the pre-r5 staging (shared /tmp path rmtree'd per call + a
     non-unique memory-sink queryName) the second call either yanked the
     first's staged parquet mid-stream or failed on the duplicate sink
-    name; with fresh_scratch_dir + counter-suffixed sinks both calls must
-    hash-match the oracle."""
+    name; with a read-only source staged once per table stamp and
+    counter-suffixed sinks both calls must hash-match the oracle."""
     name = "stream_stateful_running_count"
     with cf.ThreadPoolExecutor(max_workers=2) as pool:
         f1 = pool.submit(SPECS[name].fn, spark, SF_DIR)

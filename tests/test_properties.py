@@ -214,6 +214,15 @@ def test_events_long_ts_divisor_detects_epoch_unit(tmp_path):
         p = str(tmp_path / f"ts_{expect}.parquet")
         pq.write_table(pa.table({"ts": pa.array([v, v + 5], type=pa.int64())}), p)
         assert events_long_ts_divisor(p) == expect
+    # a directory of epoch-ms part files: the max spans every part file
+    d = tmp_path / "ts_dir.parquet"
+    d.mkdir()
+    for i, v in enumerate([1_786_650_000_000, 1_786_660_000_000]):
+        pq.write_table(
+            pa.table({"ts": pa.array([v, v + 5], type=pa.int64())}),
+            str(d / f"part-{i}.parquet"),
+        )
+    assert events_long_ts_divisor(str(d)) == 1
     # real timestamp-typed file: stats are datetimes -> observed default
     assert events_long_ts_divisor("/root/testdata/sf0.001/events.parquet") == 1_000_000
 

@@ -12,6 +12,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from kafka_spark_streaming_eval_spark.plans.registry import all_queries
 from kafka_spark_streaming_eval_spark.streaming.generator import (
     synth_events_batch,
     synth_events_stream,
@@ -568,14 +569,14 @@ q.awaitTermination()
 
 
 def test_table_rows_directory_and_single_file_layouts(spark, tmp_path):
-    """_table_rows must count rows for BOTH parquet layouts: the driver's
+    """table_rows must count rows for BOTH parquet layouts: the driver's
     single-file testdata AND the directory-of-part-files layout every Spark
     write produces (VERDICT r14 item 1: the single-file assumption crashed
     all 9 streaming query paths on real deployments)."""
     import pyarrow as pa
     import pyarrow.parquet as pa_pq
 
-    from kafka_spark_streaming_eval_spark.streaming.queries import _table_rows
+    from kafka_spark_streaming_eval_spark.catalog import table_rows
 
     d = str(tmp_path / "sf_layouts")
     os.makedirs(d, exist_ok=True)
@@ -584,80 +585,113 @@ def test_table_rows_directory_and_single_file_layouts(spark, tmp_path):
         "overwrite"
     ).parquet(d + "/events.parquet")
     assert os.path.isdir(d + "/events.parquet")
-    assert _table_rows(d, "events") == 1000
+    assert table_rows(d, "events") == 1000
     # single-file layout: the driver's testdata shape
     pa_pq.write_table(
         pa.table({"doc_id": list(range(37))}), d + "/documents.parquet"
     )
     assert os.path.isfile(d + "/documents.parquet")
-    assert _table_rows(d, "documents") == 37
+    assert table_rows(d, "documents") == 37
 
 
 def test_table_rows_sees_part_file_rewritten_in_place(tmp_path):
     """Rewriting a part file in place leaves the table directory's mtime
-    unchanged; the row-count cache key must still change with it."""
+    unchanged; the row-count cache key must still change with it, for a
+    top-level part and for one inside a hive partition directory."""
     import pyarrow as pa
     import pyarrow.parquet as pa_pq
 
-    from kafka_spark_streaming_eval_spark.streaming.queries import _table_rows
+    from kafka_spark_streaming_eval_spark.catalog import table_rows
 
-    table_dir = tmp_path / "events.parquet"
-    table_dir.mkdir()
-    for i in range(2):
+    for layout, sub in (("flat", "."), ("nested", "event_type=a")):
+        sf = tmp_path / layout
+        part_dir = sf / "events.parquet" / sub
+        part_dir.mkdir(parents=True)
+        for i in range(2):
+            pa_pq.write_table(
+                pa.table({"id": list(range(10))}), str(part_dir / f"part-{i}.parquet")
+            )
+        assert table_rows(str(sf), "events") == 20, layout
+        dir_stat = os.stat(part_dir)
         pa_pq.write_table(
-            pa.table({"id": list(range(10))}), str(table_dir / f"part-{i}.parquet")
+            pa.table({"id": list(range(25))}), str(part_dir / "part-1.parquet")
         )
-    assert _table_rows(str(tmp_path), "events") == 20
-    dir_stat = os.stat(table_dir)
-    pa_pq.write_table(
-        pa.table({"id": list(range(25))}), str(table_dir / "part-1.parquet")
-    )
-    after = os.stat(table_dir)
-    assert (after.st_mtime_ns, after.st_size) == (
-        dir_stat.st_mtime_ns, dir_stat.st_size
-    )
-    assert _table_rows(str(tmp_path), "events") == 35
+        after = os.stat(part_dir)
+        assert (after.st_mtime_ns, after.st_size) == (
+            dir_stat.st_mtime_ns, dir_stat.st_size
+        )
+        assert table_rows(str(sf), "events") == 35, layout
 
 
-def test_stream_dir_rejects_nested_table_layout(tmp_path):
-    """A table directory whose part files sit one level down (a partitioned
-    write) stages no link for the flat file-stream source: _stream_dir must
-    raise naming the source, not hand back an empty stream."""
-    import pyarrow as pa
-    import pyarrow.parquet as pa_pq
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
 
-    from kafka_spark_streaming_eval_spark.streaming.queries import _stream_dir
 
-    src = tmp_path / "sf_nested" / "events.parquet"
-    (src / "event_type=click").mkdir(parents=True)
-    pa_pq.write_table(
-        pa.table({"event_id": [1, 2]}), str(src / "event_type=click" / "part-0.parquet")
-    )
+@pytest.fixture(scope="module")
+def flat_sf(spark, tmp_path_factory):
+    """Flat directory copies (three Spark part files) of events, documents."""
+    from tests.conftest import SF_DIR
+
+    d = str(tmp_path_factory.mktemp("sf_flat"))
+    for t in ("events", "documents"):
+        spark.read.parquet(f"{SF_DIR}/{t}.parquet").repartition(3).write.parquet(
+            f"{d}/{t}.parquet"
+        )
+    return d
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_tumbling_counts",
+        "stream_sliding_throughput",
+        "stream_dedup_within_watermark",
+        "stream_static_enrich_join",
+        "stream_stream_interval_join",
+        "stream_stream_left_outer_join",
+        "stream_foreachbatch_merge_upsert",
+        "stream_stateful_running_count",
+        "stream_incremental_contamination",
+    ],
+)
+def test_file_sourced_stream_same_rows_on_directory_layout(spark, flat_sf, name):
+    """Every file-sourced stream exhibit gives the same rows over a flat
+    directory copy of its table as over the single-file original."""
+    from tests.conftest import SF_DIR
+
+    fn = all_queries()[name].fn
+    single = _rows(fn(spark, SF_DIR))
+    assert single and _rows(fn(spark, flat_sf)) == single
+
+
+def test_staged_streams_keep_int96_timestamps(spark, tmp_path):
+    """Split slices and left-outer sentinels are pyarrow rewrites of a table
+    Spark wrote with INT96 timestamps; they must scan with its schema."""
+    from tests.conftest import SF_DIR
+
+    d = str(tmp_path)
+    spark.read.parquet(f"{SF_DIR}/events.parquet").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    ).repartition(3).write.parquet(f"{d}/events.parquet")
+    for name in ("stream_foreachbatch_merge_upsert", "stream_stream_left_outer_join"):
+        fn = all_queries()[name].fn
+        assert _rows(fn(spark, d)) == _rows(fn(spark, SF_DIR)), name
+
+
+def test_file_stream_reads_nested_table_layout(spark, tmp_path):
+    """A hive-nested events directory streams unsplit with every row and its
+    partition column; a split or sentinel stage, which would flatten the
+    partition directories away, raises naming the table instead."""
+    from kafka_spark_streaming_eval_spark.streaming.queries import file_stream
+    from tests.conftest import SF_DIR
+
+    d = str(tmp_path)
+    spark.read.parquet(f"{SF_DIR}/events.parquet").write.partitionBy(
+        "event_type"
+    ).parquet(f"{d}/events.parquet")
+    fn = all_queries()["stream_tumbling_counts"].fn
+    assert _rows(fn(spark, d)) == _rows(fn(spark, SF_DIR))
     with pytest.raises(ValueError, match="events.parquet"):
-        _stream_dir(str(tmp_path / "sf_nested"), "events")
-
-
-def test_stream_tumbling_counts_on_directory_layout_events(spark, tmp_path):
-    """The streaming state-sizing path end-to-end over a directory-written
-    events table: stream_tumbling_counts must run (not crash in the
-    _table_rows metadata probe) and aggregate correctly."""
-    import datetime as dt
-
-    from kafka_spark_streaming_eval_spark.plans.registry import all_queries
-
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (i, base + dt.timedelta(hours=i % 48), i % 5, "click" if i % 2 else "view",
-         float(i), "{}")
-        for i in range(200)
-    ]
-    d = str(tmp_path / "sf_dirlayout")
-    os.makedirs(d, exist_ok=True)
-    # repartition(3): a genuinely multi-part directory, not coalesce(1)
-    spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    ).repartition(3).write.mode("overwrite").parquet(d + "/events.parquet")
-    out = all_queries()["stream_tumbling_counts"].fn(spark, d).collect()
-    assert sum(r.n for r in out) == 200
-    assert {r.event_type for r in out} == {"click", "view"}
+        file_stream(spark, d, "events", splits=4)
+    with pytest.raises(ValueError, match="events.parquet"):
+        all_queries()["stream_stream_left_outer_join"].fn(spark, d)
