@@ -9,7 +9,17 @@ analyze_exp1.py:10-12), each query is timed over full materialization
 wire-format JSON events through the full reference pipeline (parse ->
 latency -> fused per-batch metrics agg) and reports events/second — the
 number comparable to the reference's sustained ~6,915 eps at saturation
-(BASELINE.md exp1).
+(BASELINE.md exp1).  Tier 2 times every non-headline query once under a
+per-attempt wall-clock budget, and a fresh ``--stream-only`` subprocess
+measures sustained eps, p95 latency and checkpoint recovery (exp1/exp3).
+
+Every phase runs through one steal-gated attempt loop (``steal_gated``):
+an attempt whose span saw hypervisor steal above ``STEAL_GATE_PCT`` is
+retried, each metric is kept from its best attempt, and the sidecar
+(``BENCH_DETAILS.json``) records every attempt's steal span.
+
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (session width),
+SPARK_GRAFT_BENCH_TIER2_BUDGET_S (default 200).
 """
 
 from __future__ import annotations
@@ -48,6 +58,7 @@ from kafka_spark_streaming_eval_spark.plans.registry import all_queries  # noqa:
 from kafka_spark_streaming_eval_spark.session import get_spark  # noqa: E402
 from kafka_spark_streaming_eval_spark.streaming.generator import (  # noqa: E402
     synth_events_batch,
+    to_wire,
 )
 from kafka_spark_streaming_eval_spark.streaming.metrics_job import (  # noqa: E402
     batch_metrics,
@@ -151,14 +162,98 @@ class StealMeter:
         return out
 
 
-# Retry gate for the batch throughput pass (mirrors how stream_payload_ok
-# already gates the streaming sentinels): a throughput_eps measured under
-# more than this much steal is re-attempted, and the payload records every
-# attempt so the recorded number is never silently weather-poisoned.
-# 0.25% is well below the 1.0% that produced r10's "+22% on identical
-# code" anomaly and above the <=0.01% observed on a quiet host.
-THROUGHPUT_STEAL_GATE_PCT = 0.25
-THROUGHPUT_STEAL_RETRIES = 2
+# The steal gate.  A phase measured under more than STEAL_GATE_PCT
+# hypervisor steal is re-attempted up to STEAL_RETRIES times, and the
+# payload records every attempt, so no recorded number is silently
+# weather-poisoned.  0.25% is well below the 1.0% that produced r10's
+# "+22% on identical code" anomaly and above the <=0.01% of a quiet host.
+STEAL_GATE_PCT = 0.25
+STEAL_RETRIES = 2
+
+
+def quiet(steal: dict) -> bool | None:
+    """Whether a StealMeter span was quiet: True at or under the gate, False
+    above it, None when the weather is unknown (no /proc/stat, or a zero
+    total-tick delta over a very short span, ADVICE r13).  Unknown weather
+    never earns a retry and never clears a gate."""
+    pct = steal.get("steal_pct") if steal.get("available") else None
+    return None if pct is None else pct <= STEAL_GATE_PCT
+
+
+def steal_gated(attempt, best: dict, retries: int = STEAL_RETRIES,
+                riders: dict | None = None) -> tuple[dict | None, dict]:
+    """Run one bench phase under the steal gate.
+
+    ``attempt(i)`` returns ``(metrics, steal)``; an attempt that raises is
+    recorded invalid and still uses up a retry.  Attempts repeat while the
+    span was stormy and retries remain.  ``best`` maps each metric to the
+    selector under which steal is one-sided noise: ``max`` for a capacity
+    (steal can only slow the machine, so any achieved rate is a valid lower
+    bound, and burst placement rather than average steal sets the damage:
+    r12 measured 467k eps at 11.3% steal against 68k at 4.0%), ``min`` for
+    a wall time.  Each metric is kept from its own best attempt, and the
+    ``riders`` named for a metric travel with it.
+
+    One stop rule beyond the gate (VERDICT r13 item 3): when the best quiet
+    attempt is more than 2x worse on the first metric than the best attempt
+    (r13: 210k eps at 0.048% steal against 1.47M at 0.538%), something
+    besides steal governed it, and one extra attempt runs so the gate can be
+    earned rather than waived.
+
+    Returns ``(kept metrics, provenance)``; the metrics are None when no
+    attempt completed.  Provenance: ``attempts`` (each metric and steal
+    span, or the error), ``kept`` (metric -> attempt number), ``gate_pct``
+    and ``gate_cleared`` (every contributing attempt was quiet)."""
+    results: list[dict | None] = []
+    attempts: list[dict] = []
+
+    def run() -> dict | None:
+        i = len(results)
+        try:
+            metrics, steal = attempt(i)
+        except Exception as exc:
+            print(f"bench: attempt {i + 1} failed ({exc!r})", file=sys.stderr)
+            results.append(None)
+            attempts.append({"valid": False, "err": repr(exc)[:300]})
+            return None
+        results.append(metrics)
+        attempts.append({"valid": True, **{m: metrics[m] for m in best}, "steal": steal})
+        return steal
+
+    for _ in range(1 + retries):
+        steal = run()
+        if steal is not None and quiet(steal) is not False:
+            break
+    first, pick = next(iter(best.items()))
+    done = [(m[first], quiet(a["steal"])) for m, a in zip(results, attempts)
+            if m is not None]
+    calm = [v for v, q in done if q]
+    if calm:
+        top, calm_top = pick(v for v, _ in done), pick(calm)
+        if max(top, calm_top) > 2 * min(top, calm_top):
+            run()
+
+    valid = [i for i, m in enumerate(results) if m is not None]
+    provenance = {"attempts": attempts, "kept": None, "gate_pct": STEAL_GATE_PCT,
+                  "gate_cleared": None}
+    if not valid:
+        return None, provenance
+    kept = {m: sel(valid, key=lambda i: results[i][m]) for m, sel in best.items()}
+    out: dict = {}
+    for m, i in kept.items():
+        for k in (m, *(riders or {}).get(m, ())):
+            out[k] = results[i].get(k)
+    provenance.update(
+        kept={m: i + 1 for m, i in kept.items()},
+        gate_cleared=all(quiet(attempts[i]["steal"]) for i in kept.values()),
+    )
+    return out, provenance
+
+
+def kept_steal_pct(provenance: dict, metric: str) -> float | None:
+    """steal_pct of the attempt that supplied ``metric``, or None."""
+    i = (provenance["kept"] or {}).get(metric)
+    return provenance["attempts"][i - 1]["steal"].get("steal_pct") if i else None
 
 
 HEADLINE = [
@@ -349,12 +444,7 @@ def throughput_eps(spark) -> tuple[float, dict]:
     """Events/second through parse -> latency -> fused metrics agg, plus the
     steal-tick weather over the measured span (warm-up pass included in the
     span: a steal burst during warm-up also poisons best-of-2)."""
-    wire = synth_events_batch(spark, THROUGHPUT_EVENTS).select(
-        F.to_json(
-            F.struct("event_id", "created_ts", "user_id", "event_type", "value", "payload")
-        ).alias("value")
-    )
-    wire = wire.cache()
+    wire = to_wire(synth_events_batch(spark, THROUGHPUT_EVENTS)).cache()
     wire.count()  # materialize the input outside the measurement
     try:
         meter = StealMeter()
@@ -368,144 +458,6 @@ def throughput_eps(spark) -> tuple[float, dict]:
         return best, meter.finish()
     finally:
         wire.unpersist()
-
-
-def throughput_eps_gated(spark) -> tuple[float, dict]:
-    """throughput_eps with the weather gate (VERDICT r11 item 1): when the
-    measured span saw more than THROUGHPUT_STEAL_GATE_PCT hypervisor steal,
-    re-attempt (up to THROUGHPUT_STEAL_RETRIES extra passes) and keep the
-    attempt with the HIGHEST eps.  Max is the right selector for a
-    capacity metric: steal can only SLOW the machine, so any achieved rate
-    is a valid lower bound on true capacity regardless of the span's
-    average steal — and burst PLACEMENT, not average steal, sets the
-    damage (measured in the first stormy closing run of r12: 467k eps at
-    11.3%-avg-steal span vs 68k eps at 4.0%, because the 4% span's burst
-    landed inside the timed pass while the 11% span's bursts missed it;
-    a least-steal selector kept the 68k artifact).  gate_cleared records
-    whether the KEPT attempt's own span was quiet — a false value flags
-    that even the max may understate capacity.  Returns (eps, provenance)
-    with every attempt's eps + steal recorded.  With /proc/stat
-    unavailable the first attempt is kept and marked weather-unknown
-    rather than retried forever."""
-    attempts: list[dict] = []
-    for i in range(1 + THROUGHPUT_STEAL_RETRIES):
-        eps, steal = throughput_eps(spark)
-        attempts.append({"eps": round(eps, 1), "steal": steal})
-        if not steal.get("available"):
-            break
-        if steal.get("steal_pct") is None:
-            # zero total-tick delta over a very short span: weather-UNKNOWN,
-            # not stormy — keep the attempt rather than burning every retry
-            # on a span /proc/stat cannot resolve (ADVICE r13).
-            break
-        if steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT:
-            break
-        if i < THROUGHPUT_STEAL_RETRIES:
-            print(
-                f"bench: throughput attempt {i + 1} saw "
-                f"{steal.get('steal_pct')}% steal (> gate "
-                f"{THROUGHPUT_STEAL_GATE_PCT}%); retrying",
-                file=sys.stderr,
-            )
-
-    def _quiet(a: dict) -> bool:
-        s = a["steal"]
-        return bool(
-            s.get("available")
-            and s.get("steal_pct") is not None
-            and s["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
-        )
-
-    # Anomaly retry (VERDICT r13 item 3): r13's attempt 2 measured 210k eps
-    # at 0.048% steal against attempt 1's 1.47M at 0.538% — a QUIET span 7x
-    # slower than a noisy one means something besides steal governed it
-    # (page-cache state after the previous 1M-event pass, JIT, cpufreq; the
-    # pressure_stall_ms deltas now in every attempt's steal dict are the
-    # diagnostic).  One extra attempt is allowed in that shape so
-    # gate_cleared can be EARNED by a quiet-and-fast span rather than
-    # waived; without it the gate breaks on the first quiet attempt no
-    # matter how implausibly slow it is.
-    anomaly_retry = False
-    quiet_eps = [a["eps"] for a in attempts if _quiet(a)]
-    if quiet_eps and max(a["eps"] for a in attempts) > 2 * max(quiet_eps):
-        anomaly_retry = True
-        eps, steal = throughput_eps(spark)
-        attempts.append({"eps": round(eps, 1), "steal": steal})
-
-    kept = max(range(len(attempts)), key=lambda i: attempts[i]["eps"])
-    provenance = {
-        "attempts": attempts,
-        "kept_attempt": kept + 1,
-        "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
-        "anomaly_retry": anomaly_retry,
-        "gate_cleared": _quiet(attempts[kept]),
-    }
-    return attempts[kept]["eps"], provenance
-
-
-# Wall-time phases get the same weather discipline (VERDICT r12 item 1):
-# r12's 79.64 s headline at 1.713% steal was only interpretable by
-# reconstructing r11's 56.0-88.9 s steal-calibration band.  MIN is the
-# right selector for a wall-time metric (steal can only SLOW a pass, so
-# the fastest attempt is the least-poisoned sample), exactly as MAX is for
-# the capacity metric above.  Known bias, accepted and recorded: retry
-# attempts run warmer (JIT/page cache) than attempt 1, so a gated round's
-# min can sit slightly below a quiet round's single attempt — kept_attempt
-# in the provenance makes that visible.
-HEADLINE_STEAL_RETRIES = 2
-TIER2_STEAL_RETRIES = 1
-STREAM_STEAL_RETRIES = 2
-
-
-def walltime_phase_gated(
-    run_phase, retries: int, label: str
-) -> tuple[dict[str, float], dict]:
-    """Run a timing phase with the steal gate: ``run_phase(attempt_idx)``
-    returns a ``{query: seconds}`` dict; when the phase's span saw more
-    than THROUGHPUT_STEAL_GATE_PCT hypervisor steal it is re-run (up to
-    ``retries`` extra passes) and the attempt with the LOWEST total is
-    kept.  Returns (kept timings, provenance) with every attempt's total +
-    steal recorded; gate_cleared says whether the KEPT attempt's own span
-    was quiet.  /proc/stat unavailable => first attempt kept,
-    weather-unknown, never an infinite retry."""
-    attempts: list[dict] = []
-    results: list[dict[str, float]] = []
-    for i in range(1 + retries):
-        meter = StealMeter()
-        timings = run_phase(i)
-        steal = meter.finish()
-        attempts.append({"total_s": round(sum(timings.values()), 4), "steal": steal})
-        results.append(timings)
-        if not steal.get("available"):
-            break
-        if steal.get("steal_pct") is None:
-            # zero total-tick delta over a very short span: weather-UNKNOWN,
-            # not stormy — keep, gate_cleared False, don't burn the retries
-            # (ADVICE r13; matches the available=False path).
-            break
-        if steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT:
-            break
-        if i < retries:
-            print(
-                f"bench: {label} attempt {i + 1} saw "
-                f"{steal.get('steal_pct')}% steal "
-                f"(> gate {THROUGHPUT_STEAL_GATE_PCT}%); retrying",
-                file=sys.stderr,
-            )
-    kept = min(range(len(attempts)), key=lambda i: attempts[i]["total_s"])
-    kept_steal = attempts[kept]["steal"]
-    provenance = {
-        "attempts": attempts,
-        "kept_attempt": kept + 1,
-        "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
-        "selector": "min-total",
-        "gate_cleared": bool(
-            kept_steal.get("available")
-            and kept_steal.get("steal_pct") is not None
-            and kept_steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
-        ),
-    }
-    return results[kept], provenance
 
 
 def _run_stream_subprocess(timeout: float = 300.0) -> dict:
@@ -530,105 +482,49 @@ def _run_stream_subprocess(timeout: float = 300.0) -> dict:
     return payload
 
 
-def _steal_quiet(steal: dict) -> bool:
-    """True iff a StealMeter dict attests a quiet span (measured, below the
-    gate).  available=False and steal_pct=None are both NOT quiet — they
-    are weather-unknown, which can never clear a gate."""
-    return bool(
-        steal.get("available")
-        and steal.get("steal_pct") is not None
-        and steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT
+def throughput_phase(spark) -> tuple[dict | None, dict]:
+    """``throughput_eps`` under the steal gate, keeping the highest eps."""
+
+    def attempt(_i):
+        eps, steal = throughput_eps(spark)
+        return {"throughput_eps": round(eps, 1)}, steal
+
+    return steal_gated(attempt, {"throughput_eps": max})
+
+
+def walltime_phase(run_pass, retries: int = STEAL_RETRIES) -> tuple[dict | None, dict]:
+    """A timing pass under the steal gate (VERDICT r12 item 1):
+    ``run_pass(i)`` returns ``{query: seconds}``, each pass is metered on
+    its own, and the pass with the lowest ``total_s`` is kept, its timings
+    riding along as ``queries``.  Known bias, accepted and recorded: retries
+    run warmer (JIT, page cache) than attempt 1, so a gated run's min can
+    sit slightly below a quiet run's single attempt."""
+
+    def attempt(i):
+        meter = StealMeter()
+        timings = run_pass(i)
+        return {"total_s": round(sum(timings.values()), 4), "queries": timings}, meter.finish()
+
+    return steal_gated(attempt, {"total_s": min}, retries, riders={"total_s": ("queries",)})
+
+
+def stream_phase() -> tuple[dict | None, dict]:
+    """The ``--stream-only`` subprocess under the steal gate (VERDICT r13
+    item 2), gated on the span the subprocess measures around its own run.
+    Sustained eps is kept by max, p95 and recovery by min; the batch count
+    and the stream_gate timeline ride with sustained eps.  An implausible
+    payload raises and so uses up a retry.  None when no attempt produced a
+    valid payload: main() then falls back to the in-process path."""
+
+    def attempt(_i):
+        payload = _run_stream_subprocess()
+        return payload, payload.get("stream_steal", {"available": False})
+
+    return steal_gated(
+        attempt,
+        {"stream_sustained_eps": max, "stream_p95_latency_ms": min, "recovery_s": min},
+        riders={"stream_sustained_eps": ("stream_batches", "stream_gate")},
     )
-
-
-def stream_phase_gated() -> tuple[dict | None, dict]:
-    """The streaming phase under the steal gate (VERDICT r13 item 2 — this
-    was the last ungated bench phase; r13's three streaming numbers ran at
-    1.39% steal with no retry).  Runs the ``--stream-only`` subprocess and,
-    when the attempt's own steal span (measured inside the subprocess
-    around the whole stream run) exceeds THROUGHPUT_STEAL_GATE_PCT, re-runs
-    up to STREAM_STEAL_RETRIES extra times.  An invalid payload also
-    consumes an attempt and retries (subsuming the old two-try validity
-    loop).
-
-    Selection is PER-METRIC, each with the selector under which steal is
-    one-sided noise: sustained eps = MAX across valid attempts (capacity —
-    steal can only depress it), p95 = MIN and recovery = MIN (wall-times —
-    steal can only stretch them).  stream_batches / stream_gate ride with
-    the max-sustained attempt.  ``gate_cleared`` is True only when EVERY
-    attempt contributing a kept metric had a quiet span.
-
-    Returns ``(metrics, provenance)``; metrics is None when no attempt
-    produced a valid payload (caller falls back to the in-process path,
-    recording its own steal under ``fallback_steal``)."""
-    attempts: list[dict] = []
-    for i in range(1 + STREAM_STEAL_RETRIES):
-        try:
-            payload = _run_stream_subprocess()
-        except Exception as exc:
-            print(
-                f"bench: --stream-only attempt {i + 1} failed ({exc!r})",
-                file=sys.stderr,
-            )
-            attempts.append({"valid": False, "err": repr(exc)[:300]})
-            continue
-        steal = payload.get("stream_steal") or {"available": False}
-        attempts.append(
-            {
-                "valid": True,
-                "sustained_eps": payload["stream_sustained_eps"],
-                "p95_ms": payload["stream_p95_latency_ms"],
-                "recovery_s": payload["recovery_s"],
-                "batches": payload.get("stream_batches"),
-                "gate": payload.get("stream_gate"),
-                "steal": steal,
-            }
-        )
-        if not steal.get("available") or steal.get("steal_pct") is None:
-            break  # weather-unknown: keep, never retry forever (ADVICE r13)
-        if steal["steal_pct"] <= THROUGHPUT_STEAL_GATE_PCT:
-            break
-        if i < STREAM_STEAL_RETRIES:
-            print(
-                f"bench: stream attempt {i + 1} saw {steal['steal_pct']}% "
-                f"steal (> gate {THROUGHPUT_STEAL_GATE_PCT}%); retrying",
-                file=sys.stderr,
-            )
-
-    provenance: dict = {
-        # per-attempt records minus the bulky stream_gate timeline (the kept
-        # attempt's gate ships as the payload's top-level stream_gate)
-        "attempts": [
-            {k: v for k, v in a.items() if k != "gate"} for a in attempts
-        ],
-        "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
-        "selector": "max-sustained/min-p95/min-recovery",
-    }
-    idx_valid = [i for i, a in enumerate(attempts) if a.get("valid")]
-    if not idx_valid:
-        provenance.update(kept=None, gate_cleared=None)
-        return None, provenance
-    i_sus = max(idx_valid, key=lambda i: attempts[i]["sustained_eps"])
-    i_p95 = min(idx_valid, key=lambda i: attempts[i]["p95_ms"])
-    i_rec = min(idx_valid, key=lambda i: attempts[i]["recovery_s"])
-    provenance.update(
-        kept={
-            "sustained_attempt": i_sus + 1,
-            "p95_attempt": i_p95 + 1,
-            "recovery_attempt": i_rec + 1,
-        },
-        gate_cleared=all(
-            _steal_quiet(attempts[i]["steal"]) for i in {i_sus, i_p95, i_rec}
-        ),
-    )
-    metrics = {
-        "stream_sustained_eps": attempts[i_sus]["sustained_eps"],
-        "stream_p95_latency_ms": attempts[i_p95]["p95_ms"],
-        "recovery_s": attempts[i_rec]["recovery_s"],
-        "stream_batches": attempts[i_sus]["batches"],
-        "stream_gate": attempts[i_sus]["gate"],
-    }
-    return metrics, provenance
 
 
 def stream_payload_ok(payload: dict, rate_eps: float | None = None) -> bool:
@@ -682,18 +578,8 @@ def streaming_live(spark, rate_eps: int = 50_000, run_s: float = 20.0):
     )
 
     ev = synth_events_stream(spark, rows_per_second=rate_eps)
-    wire = ev.select(
-        F.to_json(
-            F.struct(
-                "event_id",
-                F.unix_millis("ts").alias("created_ts"),  # real emission time
-                "user_id",
-                "event_type",
-                "value",
-                "payload",
-            )
-        ).alias("value")
-    )
+    # created_ts is the real emission time
+    wire = to_wire(ev, created_ts=F.unix_millis("ts"))
     ckpt = tempfile.mkdtemp(prefix="bench_ckpt_")
     collector = MetricsCollector()
     query, sink = run_metrics_stream(
@@ -711,10 +597,6 @@ def streaming_live(spark, rate_eps: int = 50_000, run_s: float = 20.0):
     # several x larger).  Startup/backlog transients are not part of
     # BASELINE exp1's sustained-throughput definition (it excluded 120 s
     # of a 360 s run as warm-up), so gating here is methodology-faithful.
-    # SPARK_GRAFT_STREAM_DEBUG=1: narrate the gate timeline to stderr — the
-    # cold-start/adverse-load rehearsal evidence (VERDICT r7 item 4) needs to
-    # show WHEN the gate engaged and what batch sizes it rejected as backlog.
-    debug = os.environ.get("SPARK_GRAFT_STREAM_DEBUG") == "1"
     t_start = time.time()
     steady_from = None
     seen = 0
@@ -743,18 +625,6 @@ def streaming_live(spark, rate_eps: int = 50_000, run_s: float = 20.0):
                     )
                 else:
                     gate["timeline_truncated"] = True
-                if debug:
-                    print(
-                        f"stream-gate: +{time.time() - t_start:5.1f}s batch "
-                        f"events={r.batch_events}"
-                        + (
-                            " [backlog/startup, gated out]"
-                            if not 0 < r.batch_events <= 1.5 * rate_eps
-                            else " [steady]"
-                        ),
-                        file=sys.stderr,
-                        flush=True,
-                    )
             seen = len(rows_now)
         if rows_now and 0 < rows_now[-1].batch_events <= 1.5 * rate_eps:
             # -1: the batch that satisfied the gate IS the first steady batch
@@ -766,24 +636,8 @@ def streaming_live(spark, rate_eps: int = 50_000, run_s: float = 20.0):
                 engage_offset_s=round(time.time() - t_start, 1),
                 gated_batches=steady_from,
             )
-            if debug:
-                print(
-                    f"stream-gate: ENGAGED at +{time.time() - t_start:.1f}s "
-                    f"after {steady_from} gated batches; measurement window "
-                    f"opens on batch {steady_from + 1} "
-                    f"(events={rows_now[-1].batch_events})",
-                    file=sys.stderr,
-                    flush=True,
-                )
             break
         time.sleep(0.25)
-    if debug and steady_from is None:
-        print(
-            "stream-gate: NOT engaged within 90s — payload will be "
-            "sentinel-shaped and must be rejected by stream_payload_ok",
-            file=sys.stderr,
-            flush=True,
-        )
     time.sleep(run_s)
     query.stop()
     query.awaitTermination()
@@ -870,71 +724,48 @@ def main() -> None:
     # Warm-up: boots the JVM, JIT, filesystem caches — excluded from timing.
     specs["ref_minmax_anchor"].fn(spark, sf_dir).count()
 
-    # SPARK_GRAFT_BENCH_SHUFFLE=<seed>: time the same queries in a
-    # deterministically shuffled order — the churn-audit knob that separates
-    # "this query got slower" from "this JVM position got slower".
-    order = list(HEADLINE)
-    shuffle_seed = os.environ.get("SPARK_GRAFT_BENCH_SHUFFLE")
-    if shuffle_seed:
-        import random
-
-        random.Random(int(shuffle_seed)).shuffle(order)
-
     def run_headline(_attempt: int) -> dict[str, float]:
+        return {n: round(time_query(specs[n].fn, spark, sf_dir), 4) for n in HEADLINE}
+
+    headline, headline_weather = walltime_phase(run_headline)
+    if headline is None:
+        raise RuntimeError(f"every headline attempt failed: {headline_weather['attempts']}")
+    timings = headline["queries"]
+
+    # tier2 coverage, wall-clock budgeted (SPARK_GRAFT_BENCH_TIER2_BUDGET_S,
+    # default 200 s) so bench runtime stays bounded as the registry grows:
+    # queries past the budget are not timed this run, and tier2_n records
+    # how many were.  Retries re-run EXACTLY the set the first completed
+    # pass timed, so attempt totals compare the same queries — the env var
+    # is a PER-ATTEMPT budget (ADVICE r13): tier2 wall time is ~2x the
+    # budget after a stormy pass, ~3x if the anomaly retry also fires.
+    tier2_budget = float(os.environ.get("SPARK_GRAFT_BENCH_TIER2_BUDGET_S", "200"))
+    completed: list[str] = []
+
+    def run_tier2(_attempt: int) -> dict[str, float]:
+        if completed:
+            return {
+                n: round(time_query(specs[n].fn, spark, sf_dir, runs=1), 4)
+                for n in completed
+            }
         t: dict[str, float] = {}
-        for name in order:
-            t[name] = round(time_query(specs[name].fn, spark, sf_dir), 4)
+        t2_start = time.perf_counter()
+        for name in tier2_names(specs):
+            if time.perf_counter() - t2_start > tier2_budget:
+                print(
+                    f"bench: tier2 budget {tier2_budget:.0f}s hit after "
+                    f"{len(t)} queries; the rest are not timed",
+                    file=sys.stderr,
+                )
+                break
+            t[name] = round(time_query(specs[name].fn, spark, sf_dir, runs=1), 4)
+        completed[:] = list(t)
         return t
 
-    timings, headline_weather = walltime_phase_gated(
-        run_headline, HEADLINE_STEAL_RETRIES, "headline"
-    )
+    tier2_kept, tier2_weather = walltime_phase(run_tier2, retries=1)
+    tier2 = tier2_kept["queries"] if tier2_kept else {}
 
-    # tier2 coverage (disable with SPARK_GRAFT_BENCH_TIER2=0).  Wall-clock
-    # budgeted (SPARK_GRAFT_BENCH_TIER2_BUDGET_S, default 200 s) so bench
-    # runtime stays bounded as the registry grows: queries past the budget
-    # are not timed this run, and tier2_n records how many were.  The steal
-    # gate retries re-run EXACTLY the set attempt 1 completed, so attempt
-    # totals compare the same queries — i.e. the env var is a PER-ATTEMPT
-    # budget (ADVICE r13): a stormy first attempt triggers one full re-run
-    # of the completed set, so worst-case tier2 wall time is
-    # ~(1 + TIER2_STEAL_RETRIES) x the budget.
-    tier2: dict[str, float] = {}
-    tier2_weather: dict = {"attempts": [], "kept_attempt": None,
-                           "gate_pct": THROUGHPUT_STEAL_GATE_PCT,
-                           "selector": "min-total", "gate_cleared": None}
-    if os.environ.get("SPARK_GRAFT_BENCH_TIER2", "1") != "0":
-        tier2_budget = float(os.environ.get("SPARK_GRAFT_BENCH_TIER2_BUDGET_S", "200"))
-        completed: list[str] = []
-
-        def run_tier2(attempt: int) -> dict[str, float]:
-            t: dict[str, float] = {}
-            if attempt == 0:
-                t2_start = time.perf_counter()
-                for name in tier2_names(specs):
-                    if time.perf_counter() - t2_start > tier2_budget:
-                        print(
-                            f"bench: tier2 budget {tier2_budget:.0f}s hit after "
-                            f"{len(t)} queries; the rest are not timed",
-                            file=sys.stderr,
-                        )
-                        break
-                    t[name] = round(
-                        time_query(specs[name].fn, spark, sf_dir, runs=1), 4
-                    )
-                completed[:] = list(t)
-            else:
-                for name in completed:
-                    t[name] = round(
-                        time_query(specs[name].fn, spark, sf_dir, runs=1), 4
-                    )
-            return t
-
-        tier2, tier2_weather = walltime_phase_gated(
-            run_tier2, TIER2_STEAL_RETRIES, "tier2"
-        )
-
-    eps, throughput_weather = throughput_eps_gated(spark)
+    throughput, throughput_weather = throughput_phase(spark)
 
     # The latency-sensitive streaming measurement runs in a FRESH
     # subprocess (own JVM) — matching BASELINE exp1's methodology, which
@@ -948,19 +779,9 @@ def main() -> None:
     # numbers — "subprocess" (clean, matches BASELINE's standalone run) or
     # "in-process" (the ~30%-worse fallback) — so a silently failed
     # subprocess can never masquerade as the documented methodology.
-    stream_eps = stream_p95 = recovery_s = None
-    stream_batches = None
-    stream_gate = None
     stream_isolation = "subprocess"
-
-    stream_metrics, stream_weather = stream_phase_gated()
-    if stream_metrics is not None:
-        stream_eps = stream_metrics["stream_sustained_eps"]
-        stream_p95 = stream_metrics["stream_p95_latency_ms"]
-        recovery_s = stream_metrics["recovery_s"]
-        stream_batches = stream_metrics["stream_batches"]
-        stream_gate = stream_metrics["stream_gate"]
-    if stream_eps is None:
+    stream, stream_weather = stream_phase()
+    if stream is None:
         # settled in-process fallback (pre-r5 methodology)
         print(
             "bench: all --stream-only attempts failed; "
@@ -972,40 +793,40 @@ def main() -> None:
         spark.sparkContext._jvm.System.gc()
         time.sleep(2.0)
         fallback_meter = StealMeter()
-        stream_eps, stream_p95, recovery_s, stream_batches, stream_gate = (
-            streaming_live(spark)
-        )
+        sustained, p95, recovery, n_batches, gate = streaming_live(spark)
         fallback_steal = fallback_meter.finish()
         stream_weather["fallback_steal"] = fallback_steal
         # An in-process fallback still earns gate_cleared only if ITS span
         # was quiet — methodology is degraded but weather attestation is not.
-        stream_weather["gate_cleared"] = _steal_quiet(fallback_steal)
-        # The fallback triple gets the SAME plausibility gate as the
-        # subprocess path: a starved/backlogged in-process run can produce
-        # the identical sentinel / catch-up shapes (the r7 incident), and
-        # without this check they'd be recorded as headline numbers.
-        fallback_payload = {
-            "stream_sustained_eps": stream_eps,
-            "stream_p95_latency_ms": stream_p95,
-            "recovery_s": recovery_s,
-            "stream_batches": stream_batches,
+        stream_weather["gate_cleared"] = quiet(fallback_steal) is True
+        stream = {
+            "stream_sustained_eps": sustained,
+            "stream_p95_latency_ms": p95,
+            "recovery_s": recovery,
+            "stream_batches": n_batches,
+            "stream_gate": gate,
         }
-        if not stream_payload_ok(fallback_payload, rate_eps=50_000):
+        # The fallback gets the SAME plausibility gate as the subprocess
+        # path: a starved/backlogged in-process run can produce the
+        # identical sentinel / catch-up shapes (the r7 incident), and
+        # without this check they'd be recorded as headline numbers.
+        if not stream_payload_ok(stream, rate_eps=50_000):
             print(
-                f"bench: in-process fallback payload implausible "
-                f"{fallback_payload}; recording nulls",
+                f"bench: in-process fallback payload implausible (eps "
+                f"{sustained}, p95 {p95}, recovery {recovery}, batches "
+                f"{n_batches}); recording nulls",
                 file=sys.stderr,
             )
-            stream_eps = stream_p95 = recovery_s = None
+            stream.update(stream_sustained_eps=None, stream_p95_latency_ms=None,
+                          recovery_s=None)
             stream_isolation = "in-process-invalid"
-    total = round(sum(timings.values()), 4)
+    stream_eps = stream["stream_sustained_eps"]
+    stream_p95 = stream["stream_p95_latency_ms"]
+    recovery_s = stream["recovery_s"]
     run_steal = run_meter.finish()
-    kept_attempt = throughput_weather["attempts"][
-        throughput_weather["kept_attempt"] - 1
-    ]["steal"]
     full = {
         "metric": "headline_queries_total",
-        "value": total,
+        "value": headline["total_s"],
         "unit": "sec",
         "queries": timings,
         "tier2_queries": tier2,
@@ -1014,22 +835,20 @@ def main() -> None:
         "tier2_policy": "every non-headline query once, registration order, "
         "runs=1, per-attempt wall-clock budget",
         "sf": sf,
-        "throughput_eps": round(eps, 1),
+        "throughput_eps": throughput["throughput_eps"] if throughput else None,
         "throughput_events": THROUGHPUT_EVENTS,
         # Weather self-description (VERDICT r11 item 1): hypervisor steal
         # measured from /proc/stat across each phase, so this payload is
         # interpretable without SCALE.md archaeology.  Scalars on the stdout
         # line; the full per-phase/per-attempt breakdown rides the sidecar.
         "steal_pct_run": run_steal.get("steal_pct"),
-        "throughput_steal_pct": kept_attempt.get("steal_pct"),
+        "throughput_steal_pct": kept_steal_pct(throughput_weather, "throughput_eps"),
         "throughput_steal_gate_ok": throughput_weather["gate_cleared"],
-        "headline_steal_pct": headline_weather["attempts"][
-            headline_weather["kept_attempt"] - 1
-        ]["steal"].get("steal_pct"),
+        "headline_steal_pct": kept_steal_pct(headline_weather, "total_s"),
         "headline_steal_gate_ok": headline_weather["gate_cleared"],
         "headline_attempts": len(headline_weather["attempts"]),
         "tier2_steal_gate_ok": tier2_weather["gate_cleared"],
-        "stream_steal_gate_ok": stream_weather.get("gate_cleared"),
+        "stream_steal_gate_ok": stream_weather["gate_cleared"],
         "stream_attempts": len(stream_weather["attempts"]),
         "steal": {
             "run": run_steal,
@@ -1044,8 +863,8 @@ def main() -> None:
         "stream_sustained_eps": round(stream_eps, 1) if stream_eps is not None else None,
         "stream_p95_latency_ms": round(stream_p95, 1) if stream_p95 is not None else None,
         "recovery_s": round(recovery_s, 2) if recovery_s is not None else None,
-        "stream_batches": stream_batches,
-        "stream_gate": stream_gate,
+        "stream_batches": stream["stream_batches"],
+        "stream_gate": stream["stream_gate"],
         "baseline_throughput_eps": 6914.7,
         "baseline_p95_latency_ms": 4704.0,
         "baseline_recovery_s": 47.0,

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from kafka_spark_streaming_eval_spark.session import get_spark  # noqa: E402
 from kafka_spark_streaming_eval_spark.streaming.generator import (  # noqa: E402
     synth_events_stream,
+    to_wire,
 )
 from kafka_spark_streaming_eval_spark.streaming.metrics_job import (  # noqa: E402
     MetricsCollector,
@@ -102,20 +103,7 @@ EXP2_RATE = 8000  # the reference's exp2 stress point (analyze_exp2.py:14)
 
 
 def _wire(ev):
-    return parse_events(
-        ev.select(
-            F.to_json(
-                F.struct(
-                    "event_id",
-                    F.unix_millis("ts").alias("created_ts"),
-                    "user_id",
-                    "event_type",
-                    "value",
-                    "payload",
-                )
-            ).alias("value")
-        )
-    )
+    return parse_events(to_wire(ev, created_ts=F.unix_millis("ts")))
 
 
 def run_stream(spark, rate_eps, src_partitions=None, shuffle=None, run_s=RUN_S):

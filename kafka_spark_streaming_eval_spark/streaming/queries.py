@@ -761,13 +761,16 @@ def stream_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     the current-version pointer (exactly the checkpointable pattern Delta's
     ``MERGE INTO`` runs under foreachBatch)."""
     import os
+    import shutil
 
-    from kafka_spark_streaming_eval_spark.session import scratch_dir
+    from kafka_spark_streaming_eval_spark.session import fresh_scratch_dir, scratch_dir
 
     ev = file_stream(prep(spark), sf_dir, "events", splits=4, max_files=1)
-    run_id = next(_name_counter)
-    tgt_root = scratch_dir("stream_merge_tgt", sf_dir, str(run_id))
-    ckpt = scratch_dir("stream_merge_ckpt", sf_dir, str(run_id))
+    # The returned DataFrame scans the target lazily, so it lives in a
+    # fresh_scratch_dir (bounded retention); the checkpoint is dead once
+    # the query has terminated.
+    tgt_root = fresh_scratch_dir("stream_merge_tgt", sf_dir)
+    ckpt = scratch_dir("stream_merge_ckpt", sf_dir, str(next(_name_counter)))
     state = {"cur": None}
 
     def merge(batch_df, batch_id):
@@ -804,6 +807,7 @@ def stream_foreachbatch_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFr
     finally:
         q.stop()
         q.awaitTermination()
+        shutil.rmtree(ckpt, ignore_errors=True)
     final = spark.read.parquet(state["cur"])
     return final.select(
         "user_id",

@@ -21,8 +21,6 @@ exactly the DuckDB oracle.  Emitted counts are monotone per key, so
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
@@ -30,11 +28,10 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 from kafka_spark_streaming_eval_spark.catalog import table_rows
 from kafka_spark_streaming_eval_spark.plans.registry import register
 from kafka_spark_streaming_eval_spark.streaming.queries import (
+    _run_to_table,
     _stream_session,
     file_stream,
 )
-
-_sink_counter = itertools.count()
 
 
 def running_count_stream(stream: DataFrame) -> DataFrame:
@@ -84,28 +81,12 @@ def stream_stateful_running_count(spark: SparkSession, sf_dir: str) -> DataFrame
     carried across them; the final state (max of the monotone update
     emissions) must equal the batch ``count(*)`` — proving exactly-once
     state accumulation across batch boundaries."""
-    # A call-unique sink name: a second concurrent call must not collide
-    # on the memory-sink queryName.  State partitioning is sized to the
-    # replayed input, not the session default (see
-    # streaming.queries.STATE_ROWS_PER_PART: 32 near-empty stores paid a
-    # per-batch load/commit/fsync cycle each), on an ISOLATED session
-    # (ADVICE r14: the set/run/restore on the shared session leaked to
-    # concurrently planned queries).
-    name = f"stateful_out_{next(_sink_counter)}"
+    # State partitioning is sized to the replayed input, not the session
+    # default (see streaming.queries.STATE_ROWS_PER_PART: 32 near-empty
+    # stores paid a per-batch load/commit/fsync cycle each), on an ISOLATED
+    # session (ADVICE r14: the set/run/restore on the shared session leaked
+    # to concurrently planned queries).
     iso = _stream_session(spark, table_rows(sf_dir, "events"))
     events = file_stream(iso, sf_dir, "events", splits=4, max_files=2)
-    q = (
-        running_count_stream(events.select("user_id"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-    emitted = iso.table(name)
+    emitted = _run_to_table(running_count_stream(events.select("user_id")), "update")
     return emitted.groupBy("user_id").agg(F.max("n_events").alias("n_events"))

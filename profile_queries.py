@@ -3,7 +3,7 @@
 
 For each named registry query: capture ``explain("formatted")`` to
 ``plans/profile/<name>_<tag>.txt``, then time the query isolated — both with
-the bench's own action (``.count()``, best of N) and with the noop sink
+the bench's own action (``bench.time_query``, best of N) and with the noop sink
 (``df.write.format("noop")``, guide §1.4 — full materialization of every
 column, so plan-shape changes that ``count()`` would prune away are still
 visible).  Prints one JSON line per query and a total.
@@ -66,12 +66,7 @@ def main() -> None:
             with open(os.path.join(PLANS_DIR, f"{name}_{args.tag}.txt"), "w") as f:
                 f.write(plan)
         meter = bench.StealMeter()
-        best_count = float("inf")
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            best_count = min(best_count, time.perf_counter() - t0)
-        rec = {"count_s": round(best_count, 4)}
+        rec = {"count_s": round(bench.time_query(fn, spark, sf_dir, runs=args.runs), 4)}
         if args.noop:
             best_noop = float("inf")
             for _ in range(args.runs):

@@ -344,9 +344,10 @@ def test_throughput_gate_keeps_max_eps_attempt(monkeypatch):
         ]
     )
     monkeypatch.setattr(bench, "throughput_eps", lambda spark: next(fakes))
-    eps, prov = bench.throughput_eps_gated(spark=None)
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
     assert eps == 1_200_000.0
-    assert prov["kept_attempt"] == 2
+    assert prov["kept"] == {"throughput_eps": 2}
     assert prov["gate_cleared"] is True
     assert len(prov["attempts"]) == 2
     assert prov["attempts"][0]["steal"]["steal_pct"] == 2.5
@@ -360,9 +361,9 @@ def test_throughput_gate_no_retry_when_quiet(monkeypatch):
         return 1_000_000.0, {"available": True, "wall_s": 1.0, "steal_ticks": 0, "steal_pct": 0.01}
 
     monkeypatch.setattr(bench, "throughput_eps", fake)
-    eps, prov = bench.throughput_eps_gated(spark=None)
+    _, prov = bench.throughput_phase(spark=None)
     assert len(calls) == 1
-    assert prov["gate_cleared"] is True and prov["kept_attempt"] == 1
+    assert prov["gate_cleared"] is True and prov["kept"] == {"throughput_eps": 1}
 
 
 def test_throughput_gate_handles_no_proc_stat(monkeypatch):
@@ -375,7 +376,8 @@ def test_throughput_gate_handles_no_proc_stat(monkeypatch):
         return 500_000.0, {"available": False, "wall_s": 1.0}
 
     monkeypatch.setattr(bench, "throughput_eps", fake)
-    eps, prov = bench.throughput_eps_gated(spark=None)
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
     assert len(calls) == 1
     assert eps == 500_000.0
     assert prov["gate_cleared"] is False
@@ -399,9 +401,10 @@ def test_throughput_gate_exhausts_retries_under_sustained_steal(monkeypatch):
         ]
     )
     monkeypatch.setattr(bench, "throughput_eps", lambda spark: next(fakes))
-    eps, prov = bench.throughput_eps_gated(spark=None)
-    assert len(prov["attempts"]) == 1 + bench.THROUGHPUT_STEAL_RETRIES
-    assert prov["kept_attempt"] == 2 and eps == 850_000.0
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
+    assert len(prov["attempts"]) == 1 + bench.STEAL_RETRIES
+    assert prov["kept"] == {"throughput_eps": 2} and eps == 850_000.0
     assert prov["gate_cleared"] is False
 
 
@@ -419,8 +422,9 @@ def test_throughput_gate_burst_placement_shape(monkeypatch):
         ]
     )
     monkeypatch.setattr(bench, "throughput_eps", lambda spark: next(fakes))
-    eps, prov = bench.throughput_eps_gated(spark=None)
-    assert eps == 467_006.1 and prov["kept_attempt"] == 1
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
+    assert eps == 467_006.1 and prov["kept"] == {"throughput_eps": 1}
     assert prov["gate_cleared"] is False
     assert len(prov["attempts"]) == 3
 
@@ -455,11 +459,11 @@ def test_walltime_gate_quiet_first_attempt_no_retry(monkeypatch):
         calls.append(i)
         return {"q1": 1.0, "q2": 2.0}
 
-    timings, prov = bench.walltime_phase_gated(phase, retries=2, label="headline")
+    kept, prov = bench.walltime_phase(phase, retries=2)
+    timings = kept["queries"]
     assert calls == [0]
     assert timings == {"q1": 1.0, "q2": 2.0}
-    assert prov["kept_attempt"] == 1 and prov["gate_cleared"] is True
-    assert prov["selector"] == "min-total"
+    assert prov["kept"] == {"total_s": 1} and prov["gate_cleared"] is True
     assert prov["attempts"][0]["total_s"] == 3.0
 
 
@@ -473,12 +477,10 @@ def test_walltime_gate_retries_and_keeps_min_total(monkeypatch):
         {"available": True, "wall_s": 70.0, "steal_ticks": 40, "steal_pct": 0.9},
     ])
     walls = iter([{"q": 80.0}, {"q": 60.0}, {"q": 70.0}])
-    timings, prov = bench.walltime_phase_gated(
-        lambda i: next(walls), retries=bench.HEADLINE_STEAL_RETRIES,
-        label="headline",
-    )
-    assert len(prov["attempts"]) == 1 + bench.HEADLINE_STEAL_RETRIES
-    assert prov["kept_attempt"] == 2 and timings == {"q": 60.0}
+    kept, prov = bench.walltime_phase(lambda i: next(walls))
+    timings = kept["queries"]
+    assert len(prov["attempts"]) == 1 + bench.STEAL_RETRIES
+    assert prov["kept"] == {"total_s": 2} and timings == {"q": 60.0}
     assert prov["gate_cleared"] is False  # kept span itself was stormy
 
 
@@ -490,11 +492,10 @@ def test_walltime_gate_stops_at_first_quiet_retry(monkeypatch):
         {"available": True, "wall_s": 56.0, "steal_ticks": 1, "steal_pct": 0.02},
     ])
     walls = iter([{"q": 80.0}, {"q": 56.0}])
-    timings, prov = bench.walltime_phase_gated(
-        lambda i: next(walls), retries=2, label="headline"
-    )
+    kept, prov = bench.walltime_phase(lambda i: next(walls), retries=2)
+    timings = kept["queries"]
     assert len(prov["attempts"]) == 2
-    assert prov["kept_attempt"] == 2 and timings == {"q": 56.0}
+    assert prov["kept"] == {"total_s": 2} and timings == {"q": 56.0}
     assert prov["gate_cleared"] is True
 
 
@@ -508,9 +509,9 @@ def test_walltime_gate_weather_unknown_single_attempt(monkeypatch):
         calls.append(i)
         return {"q": 60.0}
 
-    timings, prov = bench.walltime_phase_gated(phase, retries=2, label="tier2")
+    _, prov = bench.walltime_phase(phase, retries=2)
     assert calls == [0]
-    assert prov["gate_cleared"] is False and prov["kept_attempt"] == 1
+    assert prov["gate_cleared"] is False and prov["kept"] == {"total_s": 1}
 
 
 def test_walltime_gate_scalars_survive_stdout_budget():
@@ -577,15 +578,14 @@ def test_stream_gate_quiet_first_attempt_no_retry(monkeypatch):
         return _stream_payload(46875.0, 1292.2, 5.73, 0.02)
 
     monkeypatch.setattr(bench, "_run_stream_subprocess", fake)
-    metrics, prov = bench.stream_phase_gated()
+    metrics, prov = bench.stream_phase()
     assert len(calls) == 1
     assert metrics["stream_sustained_eps"] == 46875.0
     assert metrics["stream_gate"]["engaged"] is True
     assert prov["gate_cleared"] is True
     assert prov["kept"] == {
-        "sustained_attempt": 1, "p95_attempt": 1, "recovery_attempt": 1,
+        "stream_sustained_eps": 1, "stream_p95_latency_ms": 1, "recovery_s": 1,
     }
-    assert prov["selector"] == "max-sustained/min-p95/min-recovery"
 
 
 def test_stream_gate_retries_under_steal_and_selects_per_metric(monkeypatch):
@@ -601,13 +601,13 @@ def test_stream_gate_retries_under_steal_and_selects_per_metric(monkeypatch):
     monkeypatch.setattr(
         bench, "_run_stream_subprocess", lambda timeout=300.0: next(payloads)
     )
-    metrics, prov = bench.stream_phase_gated()
-    assert len(prov["attempts"]) == 1 + bench.STREAM_STEAL_RETRIES
+    metrics, prov = bench.stream_phase()
+    assert len(prov["attempts"]) == 1 + bench.STEAL_RETRIES
     assert metrics["stream_sustained_eps"] == 48000.0
     assert metrics["stream_p95_latency_ms"] == 1200.0
     assert metrics["recovery_s"] == 4.5
     assert prov["kept"] == {
-        "sustained_attempt": 1, "p95_attempt": 2, "recovery_attempt": 3,
+        "stream_sustained_eps": 1, "stream_p95_latency_ms": 2, "recovery_s": 3,
     }
     # sustained and p95 came from stormy spans -> the composite is not quiet
     assert prov["gate_cleared"] is False
@@ -625,10 +625,10 @@ def test_stream_gate_all_quiet_contributors_clear_gate(monkeypatch):
     monkeypatch.setattr(
         bench, "_run_stream_subprocess", lambda timeout=300.0: next(payloads)
     )
-    metrics, prov = bench.stream_phase_gated()
+    metrics, prov = bench.stream_phase()
     assert len(prov["attempts"]) == 2
     assert prov["kept"] == {
-        "sustained_attempt": 2, "p95_attempt": 2, "recovery_attempt": 2,
+        "stream_sustained_eps": 2, "stream_p95_latency_ms": 2, "recovery_s": 2,
     }
     assert prov["gate_cleared"] is True
     assert metrics["stream_sustained_eps"] == 46875.0
@@ -647,7 +647,7 @@ def test_stream_gate_invalid_payload_consumes_attempt_then_recovers(monkeypatch)
         return _stream_payload(46000.0, 1300.0, 5.5, 0.01)
 
     monkeypatch.setattr(bench, "_run_stream_subprocess", fake)
-    metrics, prov = bench.stream_phase_gated()
+    metrics, prov = bench.stream_phase()
     assert metrics["stream_sustained_eps"] == 46000.0
     assert prov["attempts"][0]["valid"] is False
     assert "implausible" in prov["attempts"][0]["err"]
@@ -661,10 +661,10 @@ def test_stream_gate_all_attempts_invalid_returns_none(monkeypatch):
         raise RuntimeError("boom")
 
     monkeypatch.setattr(bench, "_run_stream_subprocess", fake)
-    metrics, prov = bench.stream_phase_gated()
+    metrics, prov = bench.stream_phase()
     assert metrics is None
     assert prov["kept"] is None and prov["gate_cleared"] is None
-    assert len(prov["attempts"]) == 1 + bench.STREAM_STEAL_RETRIES
+    assert len(prov["attempts"]) == 1 + bench.STEAL_RETRIES
     assert all(a["valid"] is False for a in prov["attempts"])
 
 
@@ -680,7 +680,7 @@ def test_stream_gate_weather_unknown_keeps_single_attempt(monkeypatch):
         return p
 
     monkeypatch.setattr(bench, "_run_stream_subprocess", fake)
-    metrics, prov = bench.stream_phase_gated()
+    metrics, prov = bench.stream_phase()
     assert len(calls) == 1
     assert metrics["stream_sustained_eps"] == 46000.0
     assert prov["gate_cleared"] is False
@@ -698,7 +698,7 @@ def test_stream_gate_scalars_survive_stdout_budget():
 
 
 # ---------------------------------------------------------------------------
-# Throughput anomaly retry (VERDICT r13 item 3): a QUIET attempt >2x slower
+# Anomaly retry (VERDICT r13 item 3): a QUIET attempt >2x slower
 # than a noisy one is an anomaly steal cannot explain; one extra attempt is
 # allowed so gate_cleared can be earned rather than waived.
 
@@ -714,11 +714,11 @@ def test_throughput_gate_anomaly_third_attempt_earns_gate(monkeypatch):
         (1_450_000.0, {"available": True, "wall_s": 2.0, "steal_ticks": 0, "steal_pct": 0.01}),
     ])
     monkeypatch.setattr(bench, "throughput_eps", lambda spark: next(fakes))
-    eps, prov = bench.throughput_eps_gated(spark=None)
-    assert prov["anomaly_retry"] is True
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
     assert len(prov["attempts"]) == 3
     assert eps == 1_471_535.0  # max still wins overall...
-    assert prov["kept_attempt"] == 1
+    assert prov["kept"] == {"throughput_eps": 1}
     assert prov["gate_cleared"] is False  # ...and the kept span was noisy
 
 
@@ -731,9 +731,9 @@ def test_throughput_gate_anomaly_retry_can_clear_gate(monkeypatch):
         (1_500_000.0, {"available": True, "wall_s": 2.0, "steal_ticks": 0, "steal_pct": 0.01}),
     ])
     monkeypatch.setattr(bench, "throughput_eps", lambda spark: next(fakes))
-    eps, prov = bench.throughput_eps_gated(spark=None)
-    assert prov["anomaly_retry"] is True
-    assert eps == 1_500_000.0 and prov["kept_attempt"] == 3
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
+    assert eps == 1_500_000.0 and prov["kept"] == {"throughput_eps": 3}
     assert prov["gate_cleared"] is True
 
 
@@ -746,9 +746,24 @@ def test_throughput_gate_no_anomaly_retry_when_quiet_is_plausible(monkeypatch):
         return 1_000_000.0, {"available": True, "wall_s": 2.0, "steal_ticks": 0, "steal_pct": 0.01}
 
     monkeypatch.setattr(bench, "throughput_eps", fake)
-    eps, prov = bench.throughput_eps_gated(spark=None)
+    bench.throughput_phase(spark=None)
     assert len(calls) == 1
-    assert prov["anomaly_retry"] is False
+
+
+def test_walltime_gate_anomaly_retry_on_min_total(monkeypatch):
+    """The anomaly rule holds for every phase: a quiet pass more than 2x
+    slower than a stormy one earns one extra attempt on a min-selected
+    wall-time phase too, and a quiet, fastest extra pass clears the gate."""
+    _meter_seq(monkeypatch, [
+        {"available": True, "wall_s": 40.0, "steal_ticks": 30, "steal_pct": 0.9},
+        {"available": True, "wall_s": 100.0, "steal_ticks": 1, "steal_pct": 0.02},
+        {"available": True, "wall_s": 38.0, "steal_ticks": 0, "steal_pct": 0.01},
+    ])
+    walls = iter([{"q": 40.0}, {"q": 100.0}, {"q": 38.0}])
+    kept, prov = bench.walltime_phase(lambda i: next(walls))
+    assert len(prov["attempts"]) == 3
+    assert prov["kept"] == {"total_s": 3} and kept["queries"] == {"q": 38.0}
+    assert prov["gate_cleared"] is True
 
 
 # ---------------------------------------------------------------------------
@@ -765,7 +780,8 @@ def test_throughput_gate_steal_pct_none_keeps_without_retry(monkeypatch):
         return 900_000.0, {"available": True, "wall_s": 0.01, "steal_ticks": 0, "steal_pct": None}
 
     monkeypatch.setattr(bench, "throughput_eps", fake)
-    eps, prov = bench.throughput_eps_gated(spark=None)
+    kept, prov = bench.throughput_phase(spark=None)
+    eps = kept["throughput_eps"]
     assert len(calls) == 1
     assert eps == 900_000.0
     assert prov["gate_cleared"] is False
@@ -781,9 +797,9 @@ def test_walltime_gate_steal_pct_none_keeps_without_retry(monkeypatch):
         calls.append(i)
         return {"q": 1.0}
 
-    timings, prov = bench.walltime_phase_gated(phase, retries=2, label="headline")
+    _, prov = bench.walltime_phase(phase, retries=2)
     assert calls == [0]
-    assert prov["gate_cleared"] is False and prov["kept_attempt"] == 1
+    assert prov["gate_cleared"] is False and prov["kept"] == {"total_s": 1}
 
 
 # ---------------------------------------------------------------------------

@@ -695,3 +695,24 @@ def test_file_stream_reads_nested_table_layout(spark, tmp_path):
         file_stream(spark, d, "events", splits=4)
     with pytest.raises(ValueError, match="events.parquet"):
         all_queries()["stream_stream_left_outer_join"].fn(spark, d)
+
+
+def test_merge_upsert_scratch_is_bounded(spark):
+    """Repeated merge-upsert calls keep at most ``_FRESH_RETAIN`` target
+    dirs (the returned DataFrame scans the newest lazily) and leave no
+    checkpoint dir behind."""
+    import glob
+
+    from kafka_spark_streaming_eval_spark.session import _FRESH_RETAIN
+    from tests.conftest import SF_DIR
+
+    def dirs(tag):
+        return set(glob.glob(f"/tmp/sgraft_{os.getpid()}_stream_merge_{tag}_*"))
+
+    tgt0, ckpt0 = dirs("tgt"), dirs("ckpt")
+    fn = all_queries()["stream_foreachbatch_merge_upsert"].fn
+    for _ in range(_FRESH_RETAIN + 2):
+        last = fn(spark, SF_DIR)
+    assert len(dirs("tgt") - tgt0) <= _FRESH_RETAIN
+    assert dirs("ckpt") - ckpt0 == set()
+    assert last.count() > 0
