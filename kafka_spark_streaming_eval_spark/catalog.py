@@ -4,7 +4,16 @@ Tables (TESTDATA.md / FIXTURES.md §4): ``region nation customer supplier part
 orders lineitem events documents embeddings`` — one parquet file per table
 under ``{sf_dir}/``, or a directory of part files (``part_files``).  This
 module is the only one that knows a table's on-disk layout: its part files,
-cache stamp, row count and ``events.ts`` encoding.
+cache stamp, schema, scan splits, row count and ``events.ts`` encoding.
+
+Metadata: one entry per table path (``_META``), built under the path's
+``table_stamp`` and replaced when the stamp changes.  It holds the inferred
+``StructType`` keyed on the session confs parquet schema inference reads
+(``_SCHEMA_CONFS``), the planned scan split count keyed on the split confs
+and the session parallelism (``_SPLIT_CONFS``), the footer row count and the
+``events`` epoch divisor.  So a warm ``scan`` reads with
+``spark.read.schema(cached)`` and launches no schema-inference job, and a
+warm ``scan_parts`` plans nothing.
 
 Scale note: on a production cluster these would be directories of many
 parquet files (optionally partitioned, e.g. ``events`` by day); every reader
@@ -13,6 +22,8 @@ pushdown and column pruning apply unchanged at 100 TB.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -109,22 +120,103 @@ def events_ts_ms(df: DataFrame, long_divisor: int = 1_000_000) -> DataFrame:
 _SPREAD_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
+# Session confs whose values change the schema Spark 4.1.2 infers for a
+# parquet path: the footer converter's flags (``ParquetFileFormat.readSchema``)
+# and which footers are read and how they merge.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+)
+# Session confs the planner's file-split packing reads (ADVICE r14); the
+# session parallelism rides the key too.
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+
+
+@dataclass
+class _Meta:
+    """What catalog knows about one table path, valid while the path's
+    ``table_stamp`` is ``stamp``.  Threads that race to fill a slot each
+    compute the same value, so no lock guards it."""
+
+    stamp: str
+    schemas: dict = field(default_factory=dict)  # _SCHEMA_CONFS values -> StructType
+    parts: dict = field(default_factory=dict)  # split key -> planned scan splits
+    rows: int | None = None
+    divisor: int | None = None  # events: long-ts divisor to ms
+
+
+_META: dict[str, _Meta] = {}
+
+
+def _meta(path: str) -> _Meta:
+    stamp = table_stamp(path)
+    m = _META.get(path)
+    if m is None or m.stamp != stamp:
+        m = _META[path] = _Meta(stamp)
+    return m
+
+
+def _conf_key(spark: SparkSession, keys: tuple) -> tuple | None:
+    """The session's values of ``keys``; None when the conf cannot be read,
+    and the caller then computes uncached rather than under a key every
+    session would share."""
+    try:
+        return tuple(spark.conf.get(k) for k in keys)
+    except Exception:
+        return None
+
+
 def scan(spark: SparkSession, sf_dir: str, name: str, stream=None) -> DataFrame:
     """The lazy parquet read of one table, ``events.ts`` normalized: UTC and
     ``nanosAsLong`` conf, the epoch-unit divisor, ``events_ts_ms``.  Given
     ``stream`` (table schema -> streaming DataFrame over the same rows), the
     stream gets that same recipe, so batch and stream differ only in the
-    source."""
+    source.  The schema comes from the table's entry; a miss infers it
+    with the read itself."""
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    m = _meta(path)
+    key = _conf_key(spark, _SCHEMA_CONFS)
+    schema = m.schemas.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key is not None:
+            m.schemas[key] = schema
+    elif stream is None:
+        df = spark.read.schema(schema).parquet(path)
     if stream is not None:
-        df = stream(df.schema)
+        df = stream(schema)
     if name == "events":
-        df = events_ts_ms(df, long_divisor=events_long_ts_divisor(path))
+        if m.divisor is None:
+            m.divisor = events_long_ts_divisor(path)
+        df = events_ts_ms(df, long_divisor=m.divisor)
     return df
+
+
+def scan_parts(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """The partition count the planner gives the table's scan, from the
+    table's entry.  It depends on the layout and on the session's split
+    confs and parallelism, which key it; a miss plans the scan
+    (``df.rdd``)."""
+    m = _meta(f"{sf_dir}/{name}.parquet")
+    key = _conf_key(spark, _SPLIT_CONFS)
+    if key is not None:
+        key += (spark.sparkContext.defaultParallelism,)
+    n = m.parts.get(key)
+    if n is None:
+        n = scan(spark, sf_dir, name).rdd.getNumPartitions()
+        if key is not None:
+            m.parts[key] = n
+    return n
 
 
 def table(
@@ -157,8 +249,7 @@ def table(
     if key is not None and spread:
         from kafka_spark_streaming_eval_spark.session import spread_small_scan
 
-        path = f"{sf_dir}/{name}.parquet"
-        df = spread_small_scan(df, key, scan_parts=_scan_parts(df, path))
+        df = spread_small_scan(df, key, scan_parts=scan_parts(spark, sf_dir, name))
     return df
 
 
@@ -189,22 +280,16 @@ def table_stamp(path: str) -> str:
     return "|".join([path] + [f"{p}:{s.st_mtime_ns}:{s.st_size}" for p, s in stats])
 
 
-_TABLE_ROWS_CACHE: dict[str, int] = {}
-
-
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count of a testdata table from its part files' parquet footers
-    (no scan), whatever the layout; cached per ``table_stamp``."""
+    (no scan), whatever the layout; kept in the table's entry."""
     import pyarrow.parquet as pq
 
     path = f"{sf_dir}/{name}.parquet"
-    key = table_stamp(path)
-    n = _TABLE_ROWS_CACHE.get(key)
-    if n is None:
-        n = _TABLE_ROWS_CACHE[key] = sum(
-            pq.ParquetFile(part).metadata.num_rows for part in part_files(path)
-        )
-    return n
+    m = _meta(path)
+    if m.rows is None:
+        m.rows = sum(pq.ParquetFile(part).metadata.num_rows for part in part_files(path))
+    return m.rows
 
 
 def write_part(t, dest: str, like: str) -> None:
@@ -216,34 +301,6 @@ def write_part(t, dest: str, like: str) -> None:
     schema = pq.ParquetFile(part_files(like)[0]).schema
     int96 = any(c.physical_type == "INT96" for c in schema)
     pq.write_table(t, dest, use_deprecated_int96_timestamps=int96)
-
-
-# (table_stamp, split conf) -> planned scan partition count.  The probe
-# costs ~45 ms of physical planning per call (df.rdd), and table() runs
-# several times per query build; the layout of a given table cannot change
-# without its stamp changing.  The planner's split count ALSO depends on
-# session conf (ADVICE r14: maxPartitionBytes and the parallelism-derived
-# openCost packing), so those ride the key — a value cached under one
-# session's conf can't leak into a session planned differently in the same
-# process; when the conf cannot be read the count is planned uncached.
-_SCAN_PARTS_CACHE: dict[tuple, int] = {}
-
-
-def _scan_parts(df: DataFrame, path: str) -> int:
-    sess = df.sparkSession
-    try:
-        conf_key = (
-            sess.conf.get("spark.sql.files.maxPartitionBytes", ""),
-            sess.conf.get("spark.sql.files.openCostInBytes", ""),
-            sess.sparkContext.defaultParallelism,
-        )
-    except Exception:
-        return df.rdd.getNumPartitions()
-    k = (table_stamp(path), conf_key)
-    n = _SCAN_PARTS_CACHE.get(k)
-    if n is None:
-        n = _SCAN_PARTS_CACHE[k] = df.rdd.getNumPartitions()
-    return n
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -135,12 +135,12 @@ def join_star_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     demotion came from spreading BOTH facts); interleaved A/B at sf0.1:
     0.95-1.44 s -> 0.86-1.11 s, identical output, no-op on multi-split
     inputs."""
-    from kafka_spark_streaming_eval_spark.catalog import _scan_parts
+    from kafka_spark_streaming_eval_spark.catalog import scan_parts
     from kafka_spark_streaming_eval_spark.session import spread_small_scan
 
     li = _t(spark, sf_dir, "lineitem")
     li = spread_small_scan(
-        li, "l_orderkey", scan_parts=_scan_parts(li, f"{sf_dir}/lineitem.parquet")
+        li, "l_orderkey", scan_parts=scan_parts(spark, sf_dir, "lineitem")
     )
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")

@@ -424,12 +424,12 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is the probe side of both joins (orders auto-broadcasts on its own
     # estimate, customer is hinted).  Interleaved A/B at sf0.1 quiet:
     # 1.01 s -> 0.77 s, identical output; no-op on multi-split inputs.
-    from kafka_spark_streaming_eval_spark.catalog import _scan_parts
+    from kafka_spark_streaming_eval_spark.catalog import scan_parts
     from kafka_spark_streaming_eval_spark.session import spread_small_scan
 
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     li = spread_small_scan(
-        li, "l_orderkey", scan_parts=_scan_parts(li, f"{sf_dir}/lineitem.parquet")
+        li, "l_orderkey", scan_parts=scan_parts(spark, sf_dir, "lineitem")
     )
     big = (
         li.groupBy("l_orderkey")

@@ -83,20 +83,35 @@ def test_spread_key_columns_survive(spark):
     assert emb.where(F.col("vec_id").isNotNull()).count() == emb.count()
 
 
-def test_scan_parts_unreadable_conf_is_not_cached():
-    """When the session conf cannot be read, the partition count is planned
-    for this call only: no entry under a key every session would share."""
-    from types import SimpleNamespace
+def test_warm_table_plans_nothing(spark, monkeypatch):
+    """A second ``table`` call on a spread table takes its scan split count
+    from the table's catalog entry: no ``df.rdd`` physical plan."""
+    table(spark, SF_DIR, "documents")
+    cls = type(table(spark, SF_DIR, "documents", spread=False))
+    planned = []
+    rdd = cls.rdd
+    monkeypatch.setattr(cls, "rdd", property(lambda df: planned.append(1) or rdd.__get__(df)))
+    table(spark, SF_DIR, "documents")
+    assert planned == []
+
+
+def test_scan_parts_unreadable_conf_is_not_cached(spark, monkeypatch):
+    """When the session's split confs cannot be read, the partition count is
+    planned for this call only: no entry under a key every session would
+    share."""
+    from pyspark.sql.conf import RuntimeConfig
 
     from kafka_spark_streaming_eval_spark import catalog
 
-    def unreadable(*_args):
-        raise RuntimeError("conf unavailable")
+    get = RuntimeConfig.get
 
-    df = SimpleNamespace(
-        sparkSession=SimpleNamespace(conf=SimpleNamespace(get=unreadable)),
-        rdd=SimpleNamespace(getNumPartitions=lambda: 3),
-    )
-    before = dict(catalog._SCAN_PARTS_CACHE)
-    assert catalog._scan_parts(df, f"{SF_DIR}/documents.parquet") == 3
-    assert catalog._SCAN_PARTS_CACHE == before
+    def unreadable(self, key, *args):
+        if key in catalog._SPLIT_CONFS:
+            raise RuntimeError("conf unavailable")
+        return get(self, key, *args)
+
+    monkeypatch.setattr(RuntimeConfig, "get", unreadable)
+    entry = catalog._meta(f"{SF_DIR}/documents.parquet")
+    before = dict(entry.parts)
+    assert catalog.scan_parts(spark, SF_DIR, "documents") == 1
+    assert entry.parts == before

@@ -246,89 +246,6 @@ def test_rate_source_generator(spark):
     assert out.where((F.col("value") < 0) | (F.col("value") > 99.9)).count() == 0
 
 
-def test_tws_gate_reflects_protobuf_presence():
-    """The transformWithState gate must track the actual dependency: it is
-    on exactly when ``google.protobuf`` (the TWS state-server protocol dep,
-    pyspark.sql.streaming.stateful_processor_api_client) imports — so the
-    skip in test_tws_running_stats is always for the documented reason and
-    never masks an unrelated breakage."""
-    from kafka_spark_streaming_eval_spark.streaming.tws import tws_available
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        have = True
-    except ImportError:
-        have = False
-    assert tws_available() is have
-
-
-def test_tws_running_stats(spark, tmp_path):
-    """transformWithStateInPandas end-to-end (Spark 4 StatefulProcessor):
-    multi-batch per-user running stats must equal the batch aggregate.
-    Skipped where google.protobuf (the TWS state-server protocol dep) is
-    absent — the container case; runs on any real Spark 4 deployment."""
-    import pytest
-
-    from kafka_spark_streaming_eval_spark.streaming.tws import (
-        ROCKSDB_PROVIDER,
-        running_stats_stream,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf not installed: transformWithState gated")
-
-    src = str(tmp_path / "tws_src")
-    df = spark.createDataFrame(
-        [(i % 7, float(i % 10)) for i in range(1000)], "user_id long, value double"
-    )
-    df.repartition(4).write.mode("overwrite").parquet(src)
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
-        q = (
-            running_stats_stream(spark, src)
-            .writeStream.format("memory")
-            .queryName("tws_out")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    got = {
-        (r.user_id, r.n_events, r.total_cents)
-        for r in spark.table("tws_out")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"), F.max("total_cents").alias("total_cents")
-        )
-        .collect()
-    }
-    exp = {
-        (r.user_id, r.n, r.c)
-        for r in df.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("value") * 100).cast("long")).alias("c"),
-        )
-        .collect()
-    }
-    assert got == exp
-
-
 KAFKA_BROKERS = os.environ.get("SPARK_GRAFT_KAFKA_BROKERS")
 
 
@@ -389,10 +306,8 @@ def test_rocksdb_state_store_streaming_agg(spark, tmp_path):
     """The 100 TB state path, ungated: a watermarked windowed aggregation
     running on the RocksDB state store provider (state lives on executor
     local disk, not the JVM heap — the only viable provider once streaming
-    state outgrows memory) must produce exactly the batch answer.  Unlike
-    the transformWithState test this has no protobuf dependency, so the
-    RocksDB provider is exercised in every environment."""
-    from kafka_spark_streaming_eval_spark.streaming.tws import ROCKSDB_PROVIDER
+    state outgrows memory) must produce exactly the batch answer."""
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
     src = str(tmp_path / "rocksdb_src")
     df = synth_events_batch(spark, 20_000).withColumn(
@@ -401,7 +316,7 @@ def test_rocksdb_state_store_streaming_agg(spark, tmp_path):
     df.repartition(4).write.mode("overwrite").parquet(src)
 
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocksdb)
     try:
         stream = (
             spark.readStream.schema(spark.read.parquet(src).schema)
