@@ -12,6 +12,7 @@ non-relational logic (and are Arrow-vectorized when used).
 Layout
 ------
 - ``session``    SparkSession factory tuned for local testing / cluster scale
+- ``pyworker``   Python worker daemon that imports the installed PySpark
 - ``catalog``    parquet table loading + temp-view registration
 - ``plans``      query registry: name -> (Spark callable, DuckDB oracle SQL)
 - ``operators``  batch operators (reference parity, relational, dedup,

@@ -2,10 +2,10 @@
 
 Every operator from SURVEY.md §2 (reference parity + north-star extensions)
 is registered here as a named query: a Spark callable ``(spark, sf_dir) ->
-DataFrame`` plus, when SQL-expressible, an equivalent DuckDB oracle SQL
-string.  ``__spark_entry__.py`` exposes this registry to the driver, which
-runs both sides at sf=0.01 and compares row count + schema + order-
-insensitive value hash.
+DataFrame`` plus an equivalent DuckDB oracle SQL string.
+``__spark_entry__.py`` exposes this registry to the driver, which runs both
+sides at sf=0.01 and compares row count + schema + order-insensitive value
+hash.
 
 Determinism contract (so Spark and DuckDB hash-match bit-for-bit):
 
@@ -34,7 +34,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL over the pre-registered table views
+    oracle: str  # DuckDB SQL over the pre-registered table views
     category: str
     doc: str = field(default="")
 
@@ -42,13 +42,8 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, category: str, oracle: str | None = None):
-    """Decorator: register a query under ``name``.
-
-    ``oracle=None`` marks a genuinely non-SQL-expressible operator (custom
-    stateful streaming, approximate sketches at default accuracy, ...); the
-    driver then records a weaker rows-only check.
-    """
+def register(name: str, category: str, oracle: str):
+    """Decorator: register a query under ``name`` with its DuckDB ``oracle``."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:

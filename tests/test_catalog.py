@@ -37,14 +37,26 @@ def _jobs(spark, fn) -> int:
 def test_warm_table_launches_no_jobs(spark, tmp_path):
     """Every table, the spread ``documents``/``embeddings`` included, reads
     from its entry once warm: no schema-inference job, no planning job."""
-    # The events read sets nanosAsLong, one of the schema keys, so it goes
-    # first: the other tables are then warmed under the conf they keep.
-    for name in ("events", *TABLES):
+    for name in TABLES:
         table(spark, SF_DIR, name)
     assert _jobs(spark, lambda: [table(spark, SF_DIR, n) for n in TABLES]) == 0
     # The count sees the inference job of a cold path.
     shutil.copy(f"{SF_DIR}/region.parquet", tmp_path / "region.parquet")
     assert _jobs(spark, lambda: table(spark, str(tmp_path), "region")) == 1
+
+
+def test_schema_key_stable_from_first_read(spark, monkeypatch):
+    """A fresh ``prep``-ed session already has every schema conf an
+    ``events`` read sets: after one sweep with ``events`` last, a second
+    sweep infers no schema again."""
+    from kafka_spark_streaming_eval_spark.session import prep
+
+    monkeypatch.setattr(catalog, "_META", {})
+    fresh = prep(spark.newSession())
+    names = [n for n in TABLES if n != "events"] + ["events"]
+    for name in names:
+        table(fresh, SF_DIR, name)
+    assert _jobs(fresh, lambda: [table(fresh, SF_DIR, n) for n in names]) == 0
 
 
 def _ts_ms(spark, sf_dir):
